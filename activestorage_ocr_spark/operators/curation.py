@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.window import Window
 
 from . import textstats as ts
-from .lineage import MANIFEST_SCHEMA, completed_parts, manifest_path
+from .lineage import MANIFEST_SCHEMA, completed_part_set, manifest_path
 
 #: gate thresholds (doc-frequency calibrated on the synthetic corpus; a
 #: production run tunes these per source)
@@ -112,8 +112,7 @@ def run_curation_job(
     keyed = docs.withColumn(
         "part_key", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_parts)).cast("int")
     )
-    done = completed_parts(spark, out_dir)
-    done_set = {r.part_key for r in done.collect()}  # bounded by n_parts
+    done_set = completed_part_set(spark, out_dir)
     n_done_before = len(done_set)
     pending_parts = sorted(set(range(n_parts)) - done_set)
     if only_parts is not None:

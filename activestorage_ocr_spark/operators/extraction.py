@@ -27,6 +27,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..sources.session import install_zip_cache_guard
+
 SPANS_TYPE = "array<struct<start:bigint,end:bigint,kind:string>>"
 STEPS_TYPE = "array<struct<name:string,time_ms:bigint>>"
 
@@ -169,6 +171,7 @@ def make_extract_kernel(
     routing — see `extract_pages`)."""
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        install_zip_cache_guard()
         # per-worker init (amortized across batches)
         from pyspark import TaskContext
 
@@ -268,6 +271,7 @@ def make_finish_kernel(
     resolved in pass 1 rides along in the ``preset`` output column."""
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        install_zip_cache_guard()
         import pyarrow.compute as pc
         from pyspark import TaskContext
 

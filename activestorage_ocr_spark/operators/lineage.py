@@ -8,14 +8,15 @@ M4):
 
 * every url is deterministically assigned a ``part_key`` =
   pmod(xxhash64(url), n_parts) — stable across runs and cluster sizes;
-* a run processes only part_keys absent from the manifest (left-anti join —
-  the resume primitive), and commits both the main stream and the quarantine
-  side table in ONE write job to ``data/`` partitioned by
-  (outcome, part_key) with **dynamic partition overwrite** (idempotent per
-  part: a crash between data and manifest commits reprocesses and overwrites,
-  never duplicates). A single write means extraction is computed exactly once
-  and streams kernel->parquet — no cache()/count() materialization of the
-  full output before the first byte commits;
+* a run processes only part_keys absent from the manifest (a driver-side
+  ``isin`` over the pending list — the resume primitive), and commits both
+  the main stream and the quarantine side table in ONE write job to
+  ``data/`` partitioned by (outcome, part_key) with **dynamic partition
+  overwrite** (idempotent per part: a crash between data and manifest
+  commits reprocesses and overwrites, never duplicates). A single write
+  means extraction is computed exactly once and streams kernel->parquet —
+  no cache()/count() materialization of the full output before the first
+  byte commits;
 * after the data commit, one manifest row per completed part_key records the
   lineage metrics (rows in/ok/quarantined, bytes in, chars out, wall ms) —
   the structured-log analog of the reference's per-request line
@@ -59,8 +60,13 @@ def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
     return spark.createDataFrame([], MANIFEST_SCHEMA)
 
 
-def completed_parts(spark: SparkSession, out_dir: str) -> DataFrame:
-    return read_manifest(spark, out_dir).select("part_key").distinct()
+def completed_part_set(spark: SparkSession, out_dir: str) -> set[int]:
+    """Driver-side set of committed part_keys (bounded by n_parts). A first
+    run has no manifest yet, so it runs no Spark job at all."""
+    if not os.path.exists(manifest_path(out_dir)):
+        return set()
+    done = read_manifest(spark, out_dir).select("part_key").distinct()
+    return {r.part_key for r in done.collect()}
 
 
 def run_extraction_job(
@@ -86,22 +92,21 @@ def run_extraction_job(
     Returns a summary dict {run_id, parts_done, parts_skipped, n_rows}.
     """
     t0 = time.perf_counter()
-    keyed = with_part_key(pages, n_parts)
-    done = completed_parts(spark, out_dir)
-    pending = keyed.join(F.broadcast(done), "part_key", "left_anti")
-    if only_parts is not None:
-        pending = pending.filter(F.col("part_key").isin([int(p) for p in only_parts]))
-
     # Driver-side pending-part list WITHOUT scanning the input: every part
     # not in the manifest is pending (parts with no input rows are harmless
-    # in the pruning list — they just produce no manifest rows). The only
-    # input touch before the extraction job is a limit(1) emptiness probe,
-    # which stops at the first pending row (url column only, html pruned).
-    done_set = {r.part_key for r in done.collect()}  # bounded by n_parts
+    # in the pruning list — they just produce no manifest rows). The resume
+    # primitive is a driver-side isin over that list (no broadcast join, and
+    # no filter at all when every part is pending). The only input touch
+    # before the extraction job is a limit(1) emptiness probe, which stops at
+    # the first pending row (url column only, html pruned).
+    done_set = completed_part_set(spark, out_dir)
     n_done_before = len(done_set)
     pending_parts = sorted(set(range(n_parts)) - done_set)
     if only_parts is not None:
         pending_parts = sorted(set(pending_parts) & {int(p) for p in only_parts})
+    pending = with_part_key(pages, n_parts)
+    if len(pending_parts) < n_parts:
+        pending = pending.filter(F.col("part_key").isin(pending_parts))
     if not pending_parts or not pending.select("part_key").limit(1).take(1):
         return {
             "run_id": run_id,

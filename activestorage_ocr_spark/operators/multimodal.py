@@ -20,6 +20,8 @@ from collections.abc import Iterator
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
+from ..sources.session import install_zip_cache_guard
+
 IMAGE_META_SCHEMA = (
     "url string, mime string, width int, height int, n_pixels bigint, "
     "ink_ratio double, decoder string, decode_error string"
@@ -82,6 +84,7 @@ def image_meta_row(url: str, payload: bytes) -> dict | None:
 
 
 def _meta_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    install_zip_cache_guard()
     out_schema = IMAGE_META_ARROW
     for batch in batches:
         urls = batch.column("url").to_pylist()
@@ -336,6 +339,7 @@ def audio_meta_row(url: str, payload: bytes) -> dict | None:
 
 
 def _audio_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    install_zip_cache_guard()
     out_schema = AUDIO_META_ARROW
     for batch in batches:
         urls = batch.column("url").to_pylist()
@@ -431,8 +435,13 @@ def video_frame_sample(df: DataFrame, every_ms: int = 1000, payload_col: str = "
     from .extraction import ensure_workers_can_import
 
     ensure_workers_can_import(df.sparkSession)
+    proj = df.select("url", F.col(payload_col).alias("video"))
+    return proj.mapInArrow(_make_frame_kernel(every_ms), VIDEO_FRAME_SCHEMA)
 
+
+def _make_frame_kernel(every_ms: int):
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        install_zip_cache_guard()
         out_schema = pa.schema(
             [
                 pa.field("url", pa.string()),
@@ -455,8 +464,7 @@ def video_frame_sample(df: DataFrame, every_ms: int = 1000, payload_col: str = "
                 [pa.array(rows[f.name], type=f.type) for f in out_schema], schema=out_schema
             )
 
-    proj = df.select("url", F.col(payload_col).alias("video"))
-    return proj.mapInArrow(kernel, VIDEO_FRAME_SCHEMA)
+    return kernel
 
 
 # ---------------------------------------------------------------------------
@@ -569,6 +577,7 @@ def video_meta_row(url: str, payload: bytes) -> dict | None:
 
 
 def _video_meta_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    install_zip_cache_guard()
     out_schema = VIDEO_META_ARROW
     for batch in batches:
         urls = batch.column("url").to_pylist()

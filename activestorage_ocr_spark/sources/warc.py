@@ -47,6 +47,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .session import install_zip_cache_guard
+
 __all__ = ["read_warc", "to_pages", "write_warc", "parse_warc_stream", "WARC_ARROW"]
 
 WARC_ARROW = pa.schema(
@@ -257,8 +259,14 @@ def read_warc(
     if not paths:
         raise ValueError("read_warc needs at least one path")
     n_parts = min(len(paths), spark.sparkContext.defaultParallelism * tasks_per_core)
+    files = spark.createDataFrame([(p,) for p in sorted(paths)], "path string")
+    kernel = _make_warc_kernel(max_payload_bytes, batch_rows)
+    return files.repartition(n_parts).mapInArrow(kernel, WARC_SPARK_SCHEMA)
 
+
+def _make_warc_kernel(max_payload_bytes: int, batch_rows: int):
     def _kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        install_zip_cache_guard()
         from activestorage_ocr_spark.sources.warc import (  # worker-side import
             WARC_ARROW, _open_warc, parse_warc_stream,
         )
@@ -280,8 +288,7 @@ def read_warc(
         if rows:
             yield pa.RecordBatch.from_pylist(rows, schema=WARC_ARROW)
 
-    files = spark.createDataFrame([(p,) for p in sorted(paths)], "path string")
-    return files.repartition(n_parts).mapInArrow(_kernel, WARC_SPARK_SCHEMA)
+    return _kernel
 
 
 def to_pages(df: DataFrame) -> DataFrame:

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.extraction import EXTRACTED_SCHEMA, make_extract_kernel
+from ..sources.session import install_zip_cache_guard
 
 PAGES_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
 
@@ -209,14 +210,34 @@ def site_crawl_sessions(pages: DataFrame, gap: str = "30 minutes") -> DataFrame:
     so output is complete even for hosts that simply stop appearing.
     Emits (host, session_start, session_end, n_pages, total_bytes).
     """
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    tagged = pages.select(
+        F.regexp_extract("url", r"^[a-z]+://([^/]+)", 1).alias("host"),
+        "warc_ts",
+        F.coalesce(F.length("html"), F.lit(0)).cast("long").alias("n_bytes"),
+    ).withWatermark("warc_ts", gap)
+    return tagged.groupBy("host").applyInPandasWithState(
+        _make_session_fn(_duration_ms(gap)),
+        outputStructType=(
+            "host string, session_start timestamp, session_end timestamp, "
+            "n_pages long, total_bytes long"
+        ),
+        stateStructType="s0 long, s1 long, n long, b long",
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    )
+
+
+def _make_session_fn(gap_ms: int):
+    """The per-host state function of `site_crawl_sessions`."""
     import datetime as dt
 
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    gap_ms = _duration_ms(gap)
+    from pyspark.sql.streaming.state import GroupState
 
     def fn(key, pdf_iter, state: GroupState):
+        install_zip_cache_guard()
         host = key[0]
         if state.hasTimedOut:
             (s0, s1, n, b) = state.get
@@ -267,21 +288,7 @@ def site_crawl_sessions(pages: DataFrame, gap: str = "30 minutes") -> DataFrame:
         if len(out):
             yield out
 
-    tagged = pages.select(
-        F.regexp_extract("url", r"^[a-z]+://([^/]+)", 1).alias("host"),
-        "warc_ts",
-        F.coalesce(F.length("html"), F.lit(0)).cast("long").alias("n_bytes"),
-    ).withWatermark("warc_ts", gap)
-    return tagged.groupBy("host").applyInPandasWithState(
-        fn,
-        outputStructType=(
-            "host string, session_start timestamp, session_end timestamp, "
-            "n_pages long, total_bytes long"
-        ),
-        stateStructType="s0 long, s1 long, n long, b long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
+    return fn
 
 
 def _duration_ms(s: str) -> int:

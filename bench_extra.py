@@ -8,6 +8,7 @@ Usage:
   python bench_extra.py [query ...]            # time the named queries
   python bench_extra.py --explain DIR [q ...]  # also dump .explain("formatted")
   python bench_extra.py --runs N [q ...]
+  python bench_extra.py --task-overhead        # ms per empty Python task
 
 Env (same contract as bench.py): SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1), SPARK_GRAFT_CPUS (default 32). Methodology matches
@@ -39,11 +40,54 @@ DEFAULT = [
 ]
 
 
+def _empty_task(batches):
+    yield from batches
+
+
+def task_overhead(spark, reps: int = 3) -> dict:
+    """Wall ms per empty Python task (10 x CPUS one-row tasks), with the
+    workers' stock zip import-cache invalidation and again after the
+    extraction kernel has run on every worker and installed its stat guard
+    (sources/session.py). The gap is what each task pays when PySpark's
+    per-task ``importlib.invalidate_caches()`` re-reads every zip archive
+    on the worker path; rerun it after a PySpark or Python upgrade."""
+    from activestorage_ocr_spark.operators.extraction import (
+        EXTRACTED_SCHEMA, make_extract_kernel,
+    )
+
+    n = 10 * CPUS
+    ids = spark.range(0, n, 1, n)
+
+    def ms_per_task() -> float:
+        walls = []
+        for _ in range(reps):
+            t0 = time.perf_counter()
+            ids.mapInArrow(_empty_task, ids.schema).write.format("noop").mode("overwrite").save()
+            walls.append(time.perf_counter() - t0)
+        return round(sorted(walls)[len(walls) // 2] * 1000 / n, 2)
+
+    spark.sparkContext.setJobDescription("bench_extra task overhead warm")
+    ms_per_task()  # forks the Python workers
+    spark.sparkContext.setJobDescription("bench_extra task overhead stock")
+    stock = ms_per_task()
+    pages = ids.selectExpr(
+        "cast(id as string) as url", "cast(null as timestamp) as warc_ts",
+        "cast('<p>x</p>' as binary) as html", "cast(null as string) as lang",
+    )
+    spark.sparkContext.setJobDescription("bench_extra task overhead guard")
+    kernel = make_extract_kernel("pixelocr", "minimal", 1 << 20)
+    pages.mapInArrow(kernel, EXTRACTED_SCHEMA).write.format("noop").mode("overwrite").save()
+    spark.sparkContext.setJobDescription("bench_extra task overhead guarded")
+    guarded = ms_per_task()
+    return {"tasks": n, "stock_ms_per_task": stock, "guarded_ms_per_task": guarded}
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="*", default=None)
     ap.add_argument("--runs", type=int, default=1)
     ap.add_argument("--explain", metavar="DIR", default=None)
+    ap.add_argument("--task-overhead", action="store_true")
     args = ap.parse_args()
     names = args.queries or DEFAULT
 
@@ -57,6 +101,12 @@ def main() -> None:
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
+    if args.task_overhead:
+        try:
+            print(json.dumps({"cpus": CPUS, "task_overhead": task_overhead(spark)}))
+        finally:
+            spark.stop()
+        return
     out = {}
     try:
         for name in names:
