@@ -35,8 +35,9 @@ import time
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType, TimestampType
 
-from .extraction import OK_STATUSES, extract_pages
+from .extraction import EXTRACTED_SCHEMA, OK_STATUSES, extract_pages
 
 MANIFEST_SCHEMA = (
     "run_id string, part_key int, n_rows long, n_ok long, n_quarantined long, "
@@ -81,7 +82,6 @@ def run_extraction_job(
     max_bytes: int | None = None,
     doc_timeout_ms: int | None = None,
     only_parts: list[int] | None = None,
-    repartition: int | None = None,
 ) -> dict:
     """One (possibly partial) extraction run with checkpoint/resume semantics.
 
@@ -121,7 +121,6 @@ def run_extraction_job(
         preset=preset,
         max_bytes=max_bytes,
         doc_timeout_ms=doc_timeout_ms,
-        repartition=repartition,
     )
     # C7 (`lib/activestorage/ocr/result.rb:103`): stamp the persisted rows
     # once per run (excluded from byte-identity like all timing fields).
@@ -229,8 +228,9 @@ def read_quarantine(spark: SparkSession, out_dir: str) -> DataFrame:
             # A run with zero quarantined rows leaves a partitionBy dir with
             # no parquet footers; schema inference fails. Treat as empty.
             pass
-    from .extraction import EXTRACTED_SCHEMA
-
-    return spark.createDataFrame(
-        [], EXTRACTED_SCHEMA + ", processed_at timestamp, run_id string, part_key int"
-    )
+    stamps = [
+        StructField("processed_at", TimestampType()),
+        StructField("run_id", StringType()),
+        StructField("part_key", IntegerType()),
+    ]
+    return spark.createDataFrame([], StructType(EXTRACTED_SCHEMA.fields + stamps))

@@ -1,9 +1,9 @@
-"""Skew-stress bench: giant-page tail vs the three skew_handling modes.
+"""Skew-stress bench: giant-page tail vs the two skew_handling modes.
 
 Verdict r2 asked for evidence behind the single-scan giants trade-off (its
 pass-2 exchange carries all rows): build a pathological corpus — many small
 pages plus a handful of multi-MB giants — and measure wall time and shuffle
-bytes for ``skew_handling`` in {"giants", "off", "full"}.
+bytes for ``skew_handling`` in {"giants", "off"}.
 
 Usage::
 
@@ -135,7 +135,7 @@ def main() -> None:
     pages = spark.read.parquet(data)
     n = pages.count()  # warm the scan/page cache so modes compare fairly
     results = {}
-    for mode in ("off", "giants", "full"):
+    for mode in ("off", "giants"):
         best = None
         for rep in range(2):  # best-of-2: the VM swings +-30% run to run
             before = _stage_metrics(ui)

@@ -20,7 +20,7 @@ class TestNullPayloadRow:
             ("nil", dt.datetime(2025, 1, 1), None, None, "en"),
         ]
         df = spark.createDataFrame(rows, "url string, warc_ts timestamp, html binary, text string, lang string")
-        for mode in ("giants", "full", "off"):
+        for mode in ("giants", "off"):
             out = {r.url: r.status for r in extract_pages(df, skew_handling=mode).collect()}
             assert out == {"ok": "ok", "nil": "INVALID_REQUEST"}, mode
 

@@ -1,6 +1,10 @@
 """End-to-end byte-identity test: Spark pipeline output == single-node oracle
 goldens, per url, bytewise (the north-rule invariant; BASELINE.json:6)."""
 
+import datetime as dt
+
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyspark.sql.functions as F
 import pytest
 
@@ -122,8 +126,14 @@ class TestPlanShape:
 
     def test_no_shuffle_when_skew_handling_off(self, spark, corpus_dir_200):
         pages = spark.read.parquet(f"{corpus_dir_200}/pages.parquet")
-        plan = extract_pages(pages, skew_handling=False)._jdf.queryExecution().executedPlan().toString()
+        plan = extract_pages(pages, skew_handling="off")._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan
+
+    def test_only_giants_and_off_modes(self, spark, corpus_dir_200):
+        pages = spark.read.parquet(f"{corpus_dir_200}/pages.parquet")
+        for mode in ("full", True, False):
+            with pytest.raises(ValueError, match="skew_handling"):
+                extract_pages(pages, skew_handling=mode)
 
     def test_giants_mode_scans_input_once(self, spark, corpus_dir_200):
         # VERDICT r1 "what's wrong #3": the old fork-by-filter giants mode
@@ -178,3 +188,90 @@ class TestSkewRouting:
         off_pids = {r.partition_id for r in off.select("partition_id").collect()}
         assert len(off_pids) == 1
         assert len(small_pids) >= 1
+
+    def test_giants_mode_in_non_utc_session_matches_off_mode(self, spark):
+        """Pass 2 gets ``warc_ts`` back from the shuffle in the session time
+        zone. With every row in one pass-2 batch, the forwarded finished rows
+        and the extracted giants must share that type, or the Arrow stream
+        back to Spark fails on a schema mismatch."""
+        big = (b"<html><body><main><p>"
+               + b"A giant page body word " * 100
+               + b"</p></main></body></html>")
+        small = b"<html><body><main><p>Small page body of honest words.</p></main></body></html>"
+        ts = dt.datetime(2025, 3, 9, 1, 30)
+        rows = [(f"https://g{i}.example/x", ts, big, "eng") for i in range(3)]
+        rows += [(f"https://s{i}.example/x", ts, small, "eng") for i in range(6)]
+        cols = ["url", "warc_ts", "lang", "mime", "extracted_text", "confidence",
+                "engine", "status", "error_code", "warnings", "spans", "n_bytes",
+                "chars_out", "preset"]
+        zone = spark.conf.get("spark.sql.session.timeZone")
+        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+        try:
+            df = spark.createDataFrame(
+                rows, "url string, warc_ts timestamp, html binary, lang string"
+            ).coalesce(1)
+            gi = extract_pages(df, max_bytes=262_144, skew_handling="giants",
+                               giant_bytes=len(small) + 1, repartition=1)
+            off = extract_pages(df, max_bytes=262_144, skew_handling="off")
+            a = sorted(tuple(r) for r in off.select(*cols).collect())
+            b = sorted(tuple(r) for r in gi.select(*cols).collect())
+        finally:
+            spark.conf.set("spark.sql.session.timeZone", zone)
+        assert a == b
+        assert {r[cols.index("status")] for r in b} == {"ok"}
+
+
+class TestKernelPasses:
+    def test_pass2_extracts_deferred_rows_and_forwards_the_rest(self, monkeypatch):
+        """Pass 1 then pass 2 of giants routing, in-process on one Arrow
+        batch: pass 2 forwards the finished rows unchanged and runs the
+        extractor exactly once per deferred row."""
+        from activestorage_ocr_spark.engine import extract as engine_extract
+        from activestorage_ocr_spark.operators import extraction
+
+        monkeypatch.setattr(extraction, "install_zip_cache_guard", lambda: None)
+        calls = []
+        real = engine_extract.extract_document
+
+        def counting(payload, **kw):
+            calls.append(payload)
+            return real(payload, **kw)
+
+        monkeypatch.setattr(engine_extract, "extract_document", counting)
+        big = (b"<html><body><main><p>"
+               + b"A giant page body word " * 100
+               + b"</p></main></body></html>")
+        small = b"<html><body><main><p>Small page body of honest words.</p></main></body></html>"
+        payloads = [small, big, None, small, big, small]
+        n = len(payloads)
+        batch = pa.RecordBatch.from_pydict({
+            "url": [f"https://p{i}.example/x" for i in range(n)],
+            "warc_ts": pa.array([dt.datetime(2025, 3, 9, 1, 30)] * n, pa.timestamp("us", tz="UTC")),
+            "html": pa.array(payloads, pa.binary()),
+            "lang": ["en"] * n,
+        })
+
+        def run(kernel, b):
+            return list(kernel(iter([b])))
+
+        (p1,) = run(extraction.make_extract_kernel(
+            "pixelocr", "minimal", 262_144, defer_over=len(small)), batch)
+        assert p1.schema == extraction.DEFERRED_ARROW
+        assert calls == [small, None, small, small]
+        deferred = pc.is_valid(p1.column("deferred_html"))
+        assert p1.filter(deferred).column("status").to_pylist() == ["deferred"] * 2
+
+        # the shuffle hands pass 2 warc_ts in the session time zone
+        zone = pa.timestamp("us", tz="America/New_York")
+        shuffled = p1.set_column(1, pa.field("warc_ts", zone), p1.column("warc_ts").cast(zone))
+        calls.clear()
+        forwarded, finished = run(
+            extraction.make_extract_kernel("pixelocr", "minimal", 262_144), shuffled)
+        assert calls == [big, big]
+        names = extraction.EXTRACTED_ARROW.names
+        assert forwarded.equals(shuffled.filter(pc.invert(deferred)).select(names))
+        assert finished.schema == forwarded.schema
+        (off,) = run(extraction.make_extract_kernel("pixelocr", "minimal", 262_144), batch)
+        want = off.filter(deferred)
+        for col in ("url", "extracted_text", "status", "n_bytes", "chars_out", "spans"):
+            assert finished.column(col).equals(want.column(col)), col

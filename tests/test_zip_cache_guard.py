@@ -106,7 +106,6 @@ def _kernel_runs():
 
     return {
         "extract": lambda: extraction.make_extract_kernel("pixelocr", "minimal", 1 << 20)(iter([])),
-        "finish": lambda: extraction.make_finish_kernel("pixelocr", 1 << 20)(iter([])),
         "warc": lambda: warc._make_warc_kernel(1 << 20, 16)(iter([])),
         "image_meta": lambda: multimodal._meta_kernel(iter([])),
         "audio_meta": lambda: multimodal._audio_kernel(iter([])),
