@@ -3,14 +3,18 @@ whole request path (SURVEY.md §3.1 "Spark equivalent"):
 
     scan (url, warc_ts, html, lang)
       -> mapInArrow(extract_kernel, defer giants)            [pass 1]
-      -> hash exchange on url                                [one shuffle]
+      -> hash exchange on url (or a caller's key)            [one shuffle]
       -> mapInArrow(extract_kernel) finishes the giants      [pass 2]
       -> ok/quarantine split, lineage manifest, sinks
 
 Physical-plan posture (SURVEY.md §4.2): one scan, exactly one shuffle (the
 url-hash exchange; ``skew_handling="off"`` drops it and runs pass 1 alone);
 Catalyst prunes the scan to the four needed columns because the kernel is
-declared over an explicit projection.
+declared over an explicit projection. The durable job
+(`lineage.run_extraction_job`) keys that same exchange on its ``part_key``
+expression so it doubles as the write layout: its data path also has one
+exchange, and pass 2 runs in the write's tasks, at most
+``min(n_parts, spark.sql.shuffle.partitions)`` of them busy.
 
 Skew handling: a 50 MB page next to 2 KB pages makes task runtimes bimodal and
 can blow Python-worker memory when many giants land in one Arrow batch. Pass 1
@@ -28,7 +32,7 @@ from typing import Any
 
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..sources.session import install_zip_cache_guard
@@ -275,6 +279,7 @@ def extract_pages(
     skew_handling: str = "giants",
     giant_bytes: int = GIANT_BYTES,
     doc_timeout_ms: int | None = None,
+    exchange_key: str | Column = "url",
 ) -> DataFrame:
     """Run the extraction pipeline over a pages DataFrame.
 
@@ -301,9 +306,18 @@ def extract_pages(
     Any other value raises ``ValueError``.
 
     Exchange width: when ``repartition`` is not pinned, the hash exchange
-    carries no explicit count — AQE sizes it to the data (coalescing tiny
-    partitions, splitting skewed ones); per-document cost varies ~50x
-    between payload kinds, so adaptive sizing beats any fixed multiple.
+    carries no explicit count — AQE sizes it to the data by coalescing tiny
+    partitions; per-document cost varies ~50x between payload kinds, so
+    adaptive sizing beats any fixed multiple. Coalescing merges whole hash
+    partitions only, so rows with equal ``exchange_key`` stay in one pass-2
+    task.
+
+    ``exchange_key`` (default ``url``) is the hash key of that exchange. A
+    caller whose output is clustered by a function of ``url`` passes that
+    expression, and the one exchange serves both: `run_extraction_job`
+    passes its ``part_key`` expression, so pass 2 runs in the tasks that
+    write each part's files. Pass 2 then has at most as many busy tasks as
+    the key has distinct values.
 
     If the input carries a ``preset`` column it overrides the job-level
     preset per row (P5, the reference's per-request ``?preprocess=`` query
@@ -380,12 +394,12 @@ def extract_pages(
     pass1 = proj.mapInArrow(pass1_kernel, DEFERRED_SCHEMA)
     # explicit width when the caller pinned one; otherwise hash-repartition
     # WITHOUT a count so AQE sizes the exchange to the data (parallelism*4
-    # fixed widths measured ~1s of pure scheduling overhead on small inputs,
-    # and AQE splits skewed partitions at scale anyway)
+    # fixed widths measured ~1s of pure scheduling overhead on small inputs)
+    key = F.col(exchange_key) if isinstance(exchange_key, str) else exchange_key
     if repartition:
-        redistributed = pass1.repartition(repartition, F.col("url"))
+        redistributed = pass1.repartition(repartition, key)
     else:
-        redistributed = pass1.repartition(F.col("url"))
+        redistributed = pass1.repartition(key)
     return redistributed.mapInArrow(kernel, EXTRACTED_SCHEMA)
 
 

@@ -17,10 +17,23 @@ M4):
   means extraction is computed exactly once and streams kernel->parquet —
   no cache()/count() materialization of the full output before the first
   byte commits;
-* after the data commit, one manifest row per completed part_key records the
+* the durable path has ONE exchange: `extract_pages`'s giants exchange is
+  keyed on the ``part_key`` expression instead of ``url``, so it both
+  spreads the giant tail and clusters the write — each (outcome, part_key)
+  dir gets exactly one writer, and pass 2 runs in the write's tasks. AQE
+  sizes that exchange and only ever merges whole partitions, so pass-2
+  parallelism is at most ``min(n_parts, spark.sql.shuffle.partitions)``:
+  choose ``n_parts`` at least the cluster's core count;
+* after the data commit, ONE Spark job (`commit_run`) aggregates the
+  just-committed parts and appends one manifest row per part_key with the
   lineage metrics (rows in/ok/quarantined, bytes in, chars out, wall ms) —
   the structured-log analog of the reference's per-request line
-  (`rust/src/server.rs:270-277`).
+  (`rust/src/server.rs:270-277`). The run summary comes back through an
+  ``Observation`` on that job, so no manifest row crosses to the driver
+  and no Python task runs outside extraction.
+
+Every Spark job of a durable run carries a job description: ``resume
+probe``, ``data commit`` or ``manifest commit``.
 
 Exactly-once contract: after any crash/resume sequence, output contains every
 input url exactly once (tests/test_resume.py kills between commits to prove
@@ -29,25 +42,52 @@ it).
 
 from __future__ import annotations
 
+import contextlib
 import datetime
 import os
 import time
+from collections.abc import Iterator
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import IntegerType, StringType, StructField, StructType, TimestampType
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql.types import (
+    IntegerType, LongType, StringType, StructField, StructType, TimestampType,
+)
 
 from .extraction import EXTRACTED_SCHEMA, OK_STATUSES, extract_pages
 
-MANIFEST_SCHEMA = (
-    "run_id string, part_key int, n_rows long, n_ok long, n_quarantined long, "
-    "bytes_in long, chars_out long, wall_ms long, committed_at timestamp"
-)
+MANIFEST_SCHEMA = StructType([
+    StructField("run_id", StringType()),
+    StructField("part_key", IntegerType()),
+    StructField("n_rows", LongType()),
+    StructField("n_ok", LongType()),
+    StructField("n_quarantined", LongType()),
+    StructField("bytes_in", LongType()),
+    StructField("chars_out", LongType()),
+    StructField("wall_ms", LongType()),
+    StructField("committed_at", TimestampType()),
+])
+
+#: persisted quarantine rows: the kernel's output plus the run stamps
+QUARANTINE_SCHEMA = StructType(EXTRACTED_SCHEMA.fields + [
+    StructField("processed_at", TimestampType()),
+    StructField("run_id", StringType()),
+    StructField("part_key", IntegerType()),
+])
+
+#: job descriptions of a durable run's Spark jobs (event logs, Spark UI)
+RESUME_PROBE = "resume probe"
+DATA_COMMIT = "data commit"
+MANIFEST_COMMIT = "manifest commit"
+
+
+def part_key(col: str, n_parts: int) -> Column:
+    """Stable hash partition of ``col`` (north rule: url-hash-bucketed)."""
+    return F.pmod(F.xxhash64(col), F.lit(n_parts)).cast("int")
 
 
 def with_part_key(df: DataFrame, n_parts: int) -> DataFrame:
-    """Stable url-hash partition assignment (north rule: url-hash-bucketed)."""
-    return df.withColumn("part_key", F.pmod(F.xxhash64("url"), F.lit(n_parts)).cast("int"))
+    return df.withColumn("part_key", part_key("url", n_parts))
 
 
 def manifest_path(out_dir: str) -> str:
@@ -57,7 +97,7 @@ def manifest_path(out_dir: str) -> str:
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
     p = manifest_path(out_dir)
     if os.path.exists(p):
-        return spark.read.parquet(p)
+        return spark.read.schema(MANIFEST_SCHEMA).parquet(p)
     return spark.createDataFrame([], MANIFEST_SCHEMA)
 
 
@@ -68,6 +108,115 @@ def completed_part_set(spark: SparkSession, out_dir: str) -> set[int]:
         return set()
     done = read_manifest(spark, out_dir).select("part_key").distinct()
     return {r.part_key for r in done.collect()}
+
+
+@contextlib.contextmanager
+def job_description(spark: SparkSession, name: str) -> Iterator[None]:
+    """Name the Spark jobs started inside the block; the caller's own
+    description comes back afterwards."""
+    sc = spark.sparkContext
+    old = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(name)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", old)
+
+
+def resume_probe(
+    spark: SparkSession, keyed: DataFrame, out_dir: str, *,
+    n_parts: int, only_parts: list[int] | None,
+) -> tuple[int, list[int]]:
+    """(parts already committed, part_keys this run must commit). Every part
+    not in the manifest is pending (parts with no input rows are harmless in
+    the pruning list — they just produce no manifest rows); the pending list
+    comes back empty when no input row falls in it. The only input touch is
+    a limit(1) emptiness probe on ``keyed``'s ``part_key`` column."""
+    with job_description(spark, RESUME_PROBE):
+        done = completed_part_set(spark, out_dir)
+        pending = sorted(set(range(n_parts)) - done)
+        if only_parts is not None:
+            pending = sorted(set(pending) & {int(p) for p in only_parts})
+        if pending and not rows_in_parts(keyed, pending, n_parts).select("part_key").limit(1).take(1):
+            pending = []
+    return len(done), pending
+
+
+def rows_in_parts(keyed: DataFrame, parts: list[int], n_parts: int) -> DataFrame:
+    """Rows of ``keyed`` in ``parts`` — no filter at all when that is every part."""
+    if len(parts) == n_parts:
+        return keyed
+    return keyed.filter(F.col("part_key").isin(parts))
+
+
+def commit_run(
+    spark: SparkSession,
+    stamped: DataFrame,
+    out_dir: str,
+    *,
+    run_id: str,
+    parts: list[int],
+    t0: float,
+    ok: Column,
+    bytes_in: Column,
+    chars_out: Column,
+) -> dict:
+    """Commit one run of a durable job: ``stamped`` (carrying ``outcome``,
+    ``part_key`` and ``run_id``) lands in ``data/`` with dynamic partition
+    overwrite, then one Spark job aggregates the just-committed rows of
+    ``parts`` and appends their manifest rows. ``ok`` splits ``n_ok`` from
+    ``n_quarantined``; ``bytes_in`` and ``chars_out`` are summed per part.
+    ``wall_ms`` runs from ``t0`` to the end of the data commit.
+
+    Returns {parts_done, n_rows, n_ok} as observed by the manifest job."""
+    data = os.path.join(out_dir, "data")
+    with job_description(spark, DATA_COMMIT):
+        # idempotent per-part data commit: overwrite only the partitions
+        # written; a write option, so the session's mode never changes
+        (
+            stamped.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("outcome", "part_key")
+            .parquet(data)
+        )
+    wall_ms = int((time.perf_counter() - t0) * 1000)
+    # an aware UTC instant: manifests from drivers in any time zone sort
+    # consistently, whatever the session time zone
+    committed_at = datetime.datetime.now(datetime.timezone.utc)
+
+    # The manifest derives from the just-committed parquet: partition-pruned
+    # to this run's part_keys and column-pruned to the metric inputs — never
+    # a re-extraction and never a full-output scan. The known schema spares
+    # a footer read.
+    committed = (
+        spark.read.schema(stamped.schema).parquet(data)
+        .filter(F.col("part_key").isin(parts))
+        .filter(F.col("run_id") == run_id)
+    )
+    per_part = committed.groupBy("part_key").agg(
+        F.count("*").alias("n_rows"),
+        F.sum(ok.cast("long")).alias("n_ok"),
+        F.sum((~ok).cast("long")).alias("n_quarantined"),
+        F.sum(bytes_in).alias("bytes_in"),
+        F.sum(chars_out).alias("chars_out"),
+    )
+    run_values = {
+        "run_id": F.lit(run_id), "wall_ms": F.lit(wall_ms), "committed_at": F.lit(committed_at),
+    }
+    manifest = per_part.select(*(
+        run_values.get(f.name, F.col(f.name)).cast(f.dataType).alias(f.name)
+        for f in MANIFEST_SCHEMA.fields
+    ))
+    totals = Observation()
+    with job_description(spark, MANIFEST_COMMIT):
+        manifest.observe(
+            totals,
+            F.count(F.lit(1)).alias("parts_done"),
+            F.sum("n_rows").alias("n_rows"),
+            F.sum("n_ok").alias("n_ok"),
+        ).write.mode("append").parquet(manifest_path(out_dir))
+    got = totals.get
+    return {k: int(got[k] or 0) for k in ("parts_done", "n_rows", "n_ok")}
 
 
 def run_extraction_job(
@@ -89,25 +238,19 @@ def run_extraction_job(
     used by tests to simulate a crash after a partial commit, and by
     operators to drain a backlog incrementally.
 
+    The run is one resume probe, one data commit (pass 1, then pass 2 and
+    the parquet write in the same tasks) and one manifest commit. The
+    manifest's ``wall_ms`` runs from the call to the end of the data
+    commit; the manifest commit itself is not in it.
+
     Returns a summary dict {run_id, parts_done, parts_skipped, n_rows}.
     """
     t0 = time.perf_counter()
-    # Driver-side pending-part list WITHOUT scanning the input: every part
-    # not in the manifest is pending (parts with no input rows are harmless
-    # in the pruning list — they just produce no manifest rows). The resume
-    # primitive is a driver-side isin over that list (no broadcast join, and
-    # no filter at all when every part is pending). The only input touch
-    # before the extraction job is a limit(1) emptiness probe, which stops at
-    # the first pending row (url column only, html pruned).
-    done_set = completed_part_set(spark, out_dir)
-    n_done_before = len(done_set)
-    pending_parts = sorted(set(range(n_parts)) - done_set)
-    if only_parts is not None:
-        pending_parts = sorted(set(pending_parts) & {int(p) for p in only_parts})
-    pending = with_part_key(pages, n_parts)
-    if len(pending_parts) < n_parts:
-        pending = pending.filter(F.col("part_key").isin(pending_parts))
-    if not pending_parts or not pending.select("part_key").limit(1).take(1):
+    keyed = with_part_key(pages, n_parts)
+    n_done_before, parts = resume_probe(
+        spark, keyed, out_dir, n_parts=n_parts, only_parts=only_parts
+    )
+    if not parts:
         return {
             "run_id": run_id,
             "parts_done": 0,
@@ -115,12 +258,18 @@ def run_extraction_job(
             "n_rows": 0,
         }
 
+    # The giants exchange keyed on the part_key expression is also the
+    # write-layout exchange: without clustering by part_key every task fans
+    # out into ~all part_key dirs (tasks x parts tiny files — measured 8k
+    # files and 60s of footer overhead at 100k docs). It carries extracted
+    # text plus the giant tail, not raw html.
     extracted = extract_pages(
-        pending,
+        rows_in_parts(keyed, parts, n_parts),
         engine=engine,
         preset=preset,
         max_bytes=max_bytes,
         doc_timeout_ms=doc_timeout_ms,
+        exchange_key=part_key("url", n_parts),
     )
     # C7 (`lib/activestorage/ocr/result.rb:103`): stamp the persisted rows
     # once per run (excluded from byte-identity like all timing fields).
@@ -128,90 +277,25 @@ def run_extraction_job(
     # quarantine side table (P7/O7) so ONE write job commits both: extraction
     # computes exactly once, streaming kernel->parquet with no cache()/count()
     # materialization before the first byte is committed (verdict r2 fix).
+    is_ok = F.col("status").isin(*OK_STATUSES)
     stamped = (
         with_part_key(extracted, n_parts)
         .withColumn("processed_at", F.current_timestamp())
         .withColumn("run_id", F.lit(run_id))
         .withColumn(
             "outcome",
-            F.when(F.col("status").isin(*OK_STATUSES), F.lit("extracted")).otherwise(
-                F.lit("quarantine")
-            ),
+            F.when(is_ok, F.lit("extracted")).otherwise(F.lit("quarantine")),
         )
     )
-    writer_conf = {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
-    # conf.get(k, None) is None when the conf was never explicitly set;
-    # restoring must then UNSET it, not leave 'dynamic' leaking into the
-    # caller's session (it changes overwrite semantics globally)
-    old = {k: spark.conf.get(k, None) for k in writer_conf}
-    for k, v in writer_conf.items():
-        spark.conf.set(k, v)
-    try:
-        # Write-layout exchange: without it every task fans out into ~all
-        # part_key dirs (tasks x parts tiny files — measured 8k files and
-        # 60s of footer overhead at 100k docs). Clustering by part_key means
-        # each partition dir is written by exactly ONE task: n_parts*2 files
-        # total, and the exchange carries extracted text, not raw html.
-        clustered = stamped.repartition(n_parts, F.col("part_key"))
-        # idempotent per-part data commit (overwrite only touched partitions)
-        clustered.write.mode("overwrite").partitionBy("outcome", "part_key").parquet(
-            os.path.join(out_dir, "data")
-        )
-    finally:
-        for k, v in old.items():
-            if v is not None:
-                spark.conf.set(k, v)
-            else:
-                spark.conf.unset(k)
-
-    # Manifest commit happens only after the data commit succeeded, derived
-    # from the just-committed parquet: partition-pruned to this run's
-    # part_keys, column-pruned to the 4 metric columns — never a re-extraction
-    # and never a full-output scan.
-    committed = (
-        spark.read.parquet(os.path.join(out_dir, "data"))
-        .filter(F.col("part_key").isin(pending_parts))
-        .filter(F.col("run_id") == run_id)
+    done = commit_run(
+        spark, stamped, out_dir, run_id=run_id, parts=parts, t0=t0,
+        ok=is_ok, bytes_in=F.col("n_bytes"), chars_out=F.col("chars_out"),
     )
-    is_ok = F.col("status").isin(*OK_STATUSES)
-    rows = (
-        committed.groupBy("part_key")
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.sum(is_ok.cast("long")).alias("n_ok"),
-            F.sum((~is_ok).cast("long")).alias("n_quarantined"),
-            F.sum("n_bytes").alias("bytes_in"),
-            F.sum("chars_out").alias("chars_out"),
-        )
-        .collect()
-    )
-    wall_ms = int((time.perf_counter() - t0) * 1000)
-    # UTC regardless of driver timezone: manifests from different drivers
-    # must sort consistently (naive value — Spark TimestampType strips tz)
-    committed_at = datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
-    manifest = spark.createDataFrame(
-        [
-            (
-                run_id,
-                r.part_key,
-                r.n_rows,
-                r.n_ok,
-                r.n_quarantined,
-                r.bytes_in,
-                r.chars_out,
-                wall_ms,
-                committed_at,
-            )
-            for r in rows
-        ],
-        MANIFEST_SCHEMA,
-    )
-    manifest.write.mode("append").parquet(manifest_path(out_dir))
     return {
         "run_id": run_id,
-        "parts_done": len(rows),
-        "parts_skipped": int(n_done_before),
-        "n_rows": int(sum(r.n_rows for r in rows)),
+        "parts_done": done["parts_done"],
+        "parts_skipped": n_done_before,
+        "n_rows": done["n_rows"],
     }
 
 
@@ -220,17 +304,9 @@ def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
 
 
 def read_quarantine(spark: SparkSession, out_dir: str) -> DataFrame:
+    """Quarantined rows of every run; empty (typed) when there are none. The
+    known schema also covers a dir that holds no parquet footers."""
     p = os.path.join(out_dir, "data", "outcome=quarantine")
     if os.path.exists(p):
-        try:
-            return spark.read.parquet(p)
-        except Exception:
-            # A run with zero quarantined rows leaves a partitionBy dir with
-            # no parquet footers; schema inference fails. Treat as empty.
-            pass
-    stamps = [
-        StructField("processed_at", TimestampType()),
-        StructField("run_id", StringType()),
-        StructField("part_key", IntegerType()),
-    ]
-    return spark.createDataFrame([], StructType(EXTRACTED_SCHEMA.fields + stamps))
+        return spark.read.schema(QUARANTINE_SCHEMA).parquet(p)
+    return spark.createDataFrame([], QUARANTINE_SCHEMA)

@@ -1,14 +1,21 @@
 """Pages-table reader/writer facade (SURVEY.md §2.1 S1/S4).
 
 At production scale the input is a salted, url-hash-bucketed **Iceberg** table
-(north rule); this sandbox ships no Iceberg jars, so the facade tries the
-Iceberg source first and falls back to parquet with identical semantics
-(SURVEY.md §7.1 M4: "parquet + manifest fallback — same commit semantics").
-Readers push column pruning and partition predicates down either way.
+(north rule); this sandbox ships no Iceberg jars, so the facade checks once
+per SparkContext whether the ``iceberg`` source resolves
+(`iceberg_available`) and otherwise reads and writes parquet with identical
+semantics (SURVEY.md §7.1 M4: "parquet + manifest fallback — same commit
+semantics"). Readers push column pruning and partition predicates down
+either way.
 """
 
 from __future__ import annotations
 
+import weakref
+
+from py4j.java_gateway import is_instance_of
+from py4j.protocol import Py4JJavaError
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -26,17 +33,45 @@ def _looks_like_table_ident(source: str) -> bool:
     return True
 
 
+_ICEBERG: weakref.WeakKeyDictionary[SparkContext, bool] = weakref.WeakKeyDictionary()
+
+
+def iceberg_available(spark: SparkSession) -> bool:
+    """Whether the ``iceberg`` data source resolves in this SparkContext;
+    looked up once per context. Only a missing source counts as "no"; any
+    other lookup failure (a broken Iceberg install) raises."""
+    sc = spark.sparkContext
+    if sc not in _ICEBERG:
+        try:
+            sc._jvm.org.apache.spark.sql.execution.datasources.DataSource.lookupDataSource(
+                "iceberg", spark._jsparkSession.sessionState().conf()
+            )
+            _ICEBERG[sc] = True
+        except Py4JJavaError as e:
+            err = e.java_exception
+            if not (
+                is_instance_of(sc._gateway, err, "org.apache.spark.SparkThrowable")
+                and err.getCondition() == "DATA_SOURCE_NOT_FOUND"
+            ):
+                raise
+            _ICEBERG[sc] = False
+    return _ICEBERG[sc]
+
+
 def read_pages(spark: SparkSession, source: str) -> DataFrame:
-    """Read a pages table from an Iceberg table identifier or a parquet path."""
-    if _looks_like_table_ident(source):
+    """Read a pages table from an Iceberg table identifier or a parquet path.
+    Without Iceberg, an identifier resolves through the session catalog and
+    a path reads as parquet, with no Iceberg attempt."""
+    if iceberg_available(spark):
         try:
             return spark.read.format("iceberg").load(source)
         except Exception:
-            return spark.table(source)
-    try:
-        return spark.read.format("iceberg").load(source)
-    except Exception:
-        return spark.read.parquet(source)
+            # not an Iceberg table: a catalog table of another format, or a
+            # plain parquet dir
+            pass
+    if _looks_like_table_ident(source):
+        return spark.table(source)
+    return spark.read.parquet(source)
 
 
 def read_pages_tuned(spark: SparkSession, source: str, *, tasks_per_core: int = 3) -> DataFrame:
@@ -86,11 +121,9 @@ def read_pages_pruned(
 
 def write_extracted(df: DataFrame, target: str, mode: str = "append") -> None:
     """Write the typed extraction output. Iceberg `writeTo(...).append()` when
-    the catalog resolves the identifier; parquet path otherwise."""
-    if _looks_like_table_ident(target):
-        try:
-            df.writeTo(target).append()
-            return
-        except Exception:
-            pass
+    Iceberg is available and the target is a table identifier (its errors
+    surface); a parquet path otherwise."""
+    if _looks_like_table_ident(target) and iceberg_available(df.sparkSession):
+        df.writeTo(target).append()
+        return
     df.write.mode(mode).parquet(target)

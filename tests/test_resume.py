@@ -1,6 +1,10 @@
 """Checkpoint/resume tests: kill-after-partial-commit -> resume -> output
 equals a single-run golden, exactly once per url (SURVEY.md §5.2)."""
 
+import datetime as dt
+import os
+import re
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -102,6 +106,128 @@ class TestResume:
         assert tot.ok + tot.q == 200
         assert tot.b > 0
         assert m.filter(F.col("wall_ms") < 0).count() == 0
+
+    def test_committed_at_is_utc_wall_clock(self, spark, pages, tmp_path):
+        # the session time zone only renders timestamps: the stored instant
+        # is the UTC wall clock at the commit, in any zone
+        out = str(tmp_path / "out")
+        zone = spark.conf.get("spark.sql.session.timeZone")
+        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+        try:
+            before = dt.datetime.now(dt.timezone.utc)
+            ln.run_extraction_job(
+                spark, pages, out, run_id="tz", n_parts=N_PARTS, max_bytes=MAX_BYTES,
+                only_parts=[0, 1],
+            )
+            after = dt.datetime.now(dt.timezone.utc)
+            got = ln.read_manifest(spark, out).select(
+                F.unix_micros("committed_at").alias("us")
+            ).distinct().collect()
+        finally:
+            spark.conf.set("spark.sql.session.timeZone", zone)
+        assert len(got) == 1
+        assert before.timestamp() * 1e6 <= got[0].us <= after.timestamp() * 1e6
+        # read back in the default UTC session it shows the UTC wall clock
+        shown = ln.read_manifest(spark, out).select(
+            F.date_format("committed_at", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("s")
+        ).first().s
+        want = dt.datetime.fromtimestamp(got[0].us / 1e6, dt.timezone.utc)
+        assert shown == want.strftime("%Y-%m-%d %H:%M:%S.%f")
+
+
+def _new_job_descriptions(spark, run) -> list:
+    """Descriptions of the Spark jobs ``run()`` starts, from the app status
+    store (None for a job without one)."""
+    jsc = spark.sparkContext._jsc.sc()
+
+    def jobs():
+        jsc.listenerBus().waitUntilEmpty()
+        seq = jsc.statusStore().jobsList(None)
+        return {seq.apply(i).jobId(): seq.apply(i) for i in range(seq.size())}
+
+    before = set(jobs())
+    run()
+    descs = []
+    for job_id, job in sorted(jobs().items()):
+        if job_id not in before:
+            d = job.description()
+            descs.append(d.get() if d.isDefined() else None)
+    return descs
+
+
+class TestDurableJobShape:
+    def test_data_commit_has_one_exchange_on_part_key(self, spark, pages, tmp_path, monkeypatch):
+        # the giants exchange is keyed on the part_key expression and is
+        # the only exchange on the data path: no second write-layout shuffle
+        import pyspark.sql.readwriter as rw
+
+        plans = {}
+        real = rw.DataFrameWriter.parquet
+
+        def capture(self, path, *a, **k):
+            plans[os.path.basename(path)] = self._df._jdf.queryExecution().executedPlan().toString()
+            return real(self, path, *a, **k)
+
+        monkeypatch.setattr(rw.DataFrameWriter, "parquet", capture)
+        out = str(tmp_path / "out")
+        ln.run_extraction_job(spark, pages, out, run_id="p", n_parts=N_PARTS, max_bytes=MAX_BYTES)
+        plan = plans["data"]
+        assert plan.count("Exchange") == 1, plan
+        key = rf"Exchange hashpartitioning\(cast\(pmod\(xxhash64\(url#\d+, 42\), {N_PARTS}\) as int\)"
+        assert len(re.findall(key, plan)) == 1, plan
+        # the manifest job runs no Python
+        assert "MapInArrow" not in plans["_manifest"], plans["_manifest"]
+
+    def test_one_file_per_partition_dir(self, spark, pages, tmp_path):
+        out = str(tmp_path / "out")
+        ln.run_extraction_job(spark, pages, out, run_id="f", n_parts=N_PARTS, max_bytes=MAX_BYTES)
+        dirs = {}
+        for root, _, files in os.walk(os.path.join(out, "data")):
+            if os.path.basename(root).startswith("part_key="):
+                dirs[root] = [f for f in files if f.endswith(".parquet")]
+        assert len(dirs) > N_PARTS  # both outcomes present
+        assert {os.path.basename(os.path.dirname(d)) for d in dirs} == {
+            "outcome=extracted", "outcome=quarantine",
+        }
+        assert all(len(f) == 1 for f in dirs.values()), dirs
+
+    def test_every_job_is_named(self, spark, pages, tmp_path):
+        out = str(tmp_path / "out")
+        sc = spark.sparkContext
+        sc.setJobDescription("caller")
+        try:
+            first = _new_job_descriptions(spark, lambda: ln.run_extraction_job(
+                spark, pages, out, run_id="n1", n_parts=N_PARTS, max_bytes=MAX_BYTES,
+            ))
+            # the caller's description comes back after the run
+            assert sc.getLocalProperty("spark.job.description") == "caller"
+            again = _new_job_descriptions(spark, lambda: ln.run_extraction_job(
+                spark, pages, out, run_id="n2", n_parts=N_PARTS, max_bytes=MAX_BYTES,
+            ))
+        finally:
+            sc.setLocalProperty("spark.job.description", None)
+        names = {ln.RESUME_PROBE, ln.DATA_COMMIT, ln.MANIFEST_COMMIT}
+        assert first and set(first) <= names, first
+        assert {ln.DATA_COMMIT, ln.MANIFEST_COMMIT} <= set(first), first
+        # a rerun of a completed job only probes the manifest
+        assert again and set(again) == {ln.RESUME_PROBE}, again
+
+    def test_curation_jobs_are_named(self, spark, tmp_path):
+        from activestorage_ocr_spark.operators import curation
+
+        df = spark.createDataFrame(
+            [(i, f"plain body text number {i} with enough ordinary words", "en") for i in range(20)],
+            "doc_id long, text string, lang string",
+        )
+        out = str(tmp_path / "cur")
+        first = _new_job_descriptions(
+            spark, lambda: curation.run_curation_job(spark, df, out, run_id="c", n_parts=4)
+        )
+        again = _new_job_descriptions(
+            spark, lambda: curation.run_curation_job(spark, df, out, run_id="d", n_parts=4)
+        )
+        assert first and set(first) <= {ln.RESUME_PROBE, ln.DATA_COMMIT, ln.MANIFEST_COMMIT}, first
+        assert again and set(again) == {ln.RESUME_PROBE}, again
 
 
 class TestQuarantineReads:

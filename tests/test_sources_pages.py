@@ -13,6 +13,31 @@ class TestPagesFacade:
         assert df.count() == 200
         assert set(src.PAGES_COLUMNS) <= set(df.columns)
 
+    def test_read_pages_skips_iceberg_when_absent(self, spark, corpus_dir_200, monkeypatch):
+        # no Iceberg jars: a parquet path reads as parquet without a failed
+        # format("iceberg") attempt, and an identifier through spark.table
+        from pyspark.sql.readwriter import DataFrameReader
+
+        assert not src.iceberg_available(spark)
+        formats = []
+        real = DataFrameReader.format
+
+        def counting(self, source):
+            formats.append(source)
+            return real(self, source)
+
+        monkeypatch.setattr(DataFrameReader, "format", counting)
+        path = f"{corpus_dir_200}/pages.parquet"
+        got = src.read_pages(spark, path)
+        want = spark.read.parquet(path)
+        assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+        want.createOrReplaceTempView("pages_by_ident")
+        try:
+            assert src.read_pages(spark, "pages_by_ident").count() == 200
+        finally:
+            spark.catalog.dropTempView("pages_by_ident")
+        assert "iceberg" not in formats
+
     def test_pruned_reader_pushes_filters(self, spark, corpus_dir_200):
         df = src.read_pages_pruned(
             spark,

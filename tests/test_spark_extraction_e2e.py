@@ -123,6 +123,8 @@ class TestPlanShape:
         pages = spark.read.parquet(f"{corpus_dir_200}/pages.parquet")
         plan = extract_pages(pages)._jdf.queryExecution().executedPlan().toString()
         assert plan.count("Exchange") == 1
+        # a standalone call keeps the url key
+        assert plan.count("Exchange hashpartitioning(url") == 1, plan
 
     def test_no_shuffle_when_skew_handling_off(self, spark, corpus_dir_200):
         pages = spark.read.parquet(f"{corpus_dir_200}/pages.parquet")
