@@ -308,8 +308,8 @@ def decode_g3_1d(
     them even when the PDF says ``/EndOfLine false``)."""
     if columns <= 0:
         raise G4Error("columns must be positive")
-    if rows is not None and rows * columns > 64_000_000:
-        raise G4Error("G3 image too large")
+    if rows is not None:
+        budget.check_pixels("G3 image", columns, rows, G4Error)
     br = _BitReader(data)
     w = columns
     out: list[np.ndarray] = []
@@ -459,8 +459,8 @@ def decode_g4(
     reader to a byte boundary before every coding line (/EncodedByteAlign)."""
     if columns <= 0:
         raise G4Error("columns must be positive")
-    if rows is not None and rows * columns > 64_000_000:
-        raise G4Error("G4 image too large")  # decode-bomb guard parity
+    if rows is not None:
+        budget.check_pixels("G4 image", columns, rows, G4Error)
     br = _BitReader(data)
     w = columns
     out: list[np.ndarray] = []
@@ -589,8 +589,8 @@ def decode_g3_2d(
     per-line tag, so any k the encoder chose decodes identically."""
     if columns <= 0:
         raise G4Error("columns must be positive")
-    if rows is not None and rows * columns > 64_000_000:
-        raise G4Error("G3-2D image too large")
+    if rows is not None:
+        budget.check_pixels("G3-2D image", columns, rows, G4Error)
     br = _BitReader(data)
     w = columns
     out: list[np.ndarray] = []

@@ -5,7 +5,9 @@ path; SURVEY.md §7.3 "byte-identity is structural").
 Routing (SURVEY.md §2.2 P1-P4, §3.1):
 
 1. size gate first, before any decoding (`rust/src/server.rs:98,187-192`):
-   payload larger than ``max_bytes`` -> IMAGE_TOO_LARGE, quarantined;
+   payload larger than ``max_bytes`` -> IMAGE_TOO_LARGE, quarantined; so
+   are streams that decode past the document's byte budget
+   (``budget.DecodeLimit``);
 2. empty payload -> INVALID_REQUEST (`rust/src/error.rs` InvalidRequest);
 3. MIME sniff from magic bytes (P2) — declared types are never trusted;
 4. PDF -> pdfx.extract_pdf (text layer -> OCR fallback, E1-E11);
@@ -181,10 +183,11 @@ def extract_document(
                 payload, engine=engine, preset=preset, max_bytes=max_bytes,
                 languages=languages, t0=t0,
             )
-    except budget.DocTimeout as e:
+    except (budget.DocTimeout, budget.DecodeLimit) as e:
+        code = E_TIMEOUT if isinstance(e, budget.DocTimeout) else E_TOO_LARGE
         return _result(
             mime=mimex.sniff_mime(payload[:1024]) if payload else mimex.MIME_OCTET,
-            status=E_TIMEOUT, error_code=E_TIMEOUT,
+            status=code, error_code=code,
             warnings=[str(e)], engine=engine, preset=preset, t0=t0,
         )
     except Exception as e:  # noqa: BLE001 — O7: quarantine, never raise
@@ -267,8 +270,8 @@ def _dispatch(
             mime=mime, status=E_UNSUPPORTED, error_code=E_UNSUPPORTED,
             warnings=[f"unsupported format: {mime}"], engine=engine, preset=preset, t0=t0,
         )
-    except budget.DocTimeout:
-        raise  # handled by extract_document -> stable TIMEOUT code
+    except (budget.DocTimeout, budget.DecodeLimit):
+        raise  # handled by extract_document -> stable TIMEOUT / IMAGE_TOO_LARGE
     except Exception as e:  # noqa: BLE001 — O7: quarantine, never raise
         return _result(
             mime=mimex.sniff_mime(payload[:1024]) if payload else mimex.MIME_OCTET,

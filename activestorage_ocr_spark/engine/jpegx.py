@@ -30,6 +30,8 @@ import struct
 
 import numpy as np
 
+from . import budget
+
 # zigzag scan order: index = scan position, value = natural (row*8+col) index
 ZIGZAG = np.array([
     0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
@@ -224,6 +226,7 @@ def _decode_to_coefficients(data: bytes):
                 raise ValueError("JPEG sampling factors beyond 2x2 not supported")
             if h == 0 or w == 0:
                 raise ValueError("zero-dimension JPEG")
+            budget.check_pixels("JPEG", w, h)
             frame = {"h": h, "w": w, "comps": comps,
                      "progressive": marker in (0xC2, 0xCA),
                      "arith": marker in (0xC9, 0xCA)}

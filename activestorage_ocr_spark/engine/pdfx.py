@@ -987,31 +987,12 @@ def _filter_list(d: dict) -> list:
     return list(filt) if isinstance(filt, list) else [filt]
 
 
-def _run_length_decode(data: bytes) -> bytes:
-    """RunLengthDecode (PDF 32000-1 §7.4.5)."""
-    out = bytearray()
-    pos = 0
-    n = len(data)
-    while pos < n:
-        l = data[pos]
-        pos += 1
-        if l == 128:  # EOD
-            break
-        if l < 128:
-            out += data[pos : pos + l + 1]
-            pos += l + 1
-        else:
-            if pos >= n:
-                raise PdfError("truncated RunLengthDecode stream")
-            out += bytes([data[pos]]) * (257 - l)
-            pos += 1
-    return bytes(out)
-
-
 def _apply_filter(name: str, data: bytes) -> bytes:
+    """One stream filter. Flate, LZW and RunLength declare no output size,
+    so their output is metered against the document's byte budget."""
     if name == "/FlateDecode":
         try:
-            return zlib.decompress(data)
+            return budget.metered(lambda n: budget.inflate(data, n))
         except zlib.error as e:
             raise PdfError(f"bad FlateDecode stream: {e}") from e
     if name == "/ASCIIHexDecode":
@@ -1035,16 +1016,19 @@ def _apply_filter(name: str, data: bytes) -> bytes:
             return base64.a85decode(body)
         except ValueError as e:
             raise PdfError(f"bad ASCII85Decode stream: {e}") from e
-    if name == "/RunLengthDecode":
-        return _run_length_decode(data)
-    if name == "/LZWDecode":
-        # default EarlyChange=1 is exactly the TIFF LZW variant
-        from .rasters import _tiff_lzw_decode
+    if name in ("/RunLengthDecode", "/LZWDecode"):
+        from .rasters import lzw_decode, packbits_decode
+
+        def decode(max_out: int) -> bytes:
+            if name == "/RunLengthDecode":  # PackBits with 128 as EOD (§7.4.5)
+                return packbits_decode(data, max_out, eod=True)
+            # the default EarlyChange=1 is exactly the TIFF LZW variant
+            return lzw_decode(data, 8, msb=True, early=1, max_out=max_out)
 
         try:
-            return _tiff_lzw_decode(data)
+            return budget.metered(decode)
         except ValueError as e:
-            raise PdfError(f"bad LZWDecode stream: {e}") from e
+            raise PdfError(f"bad {name[1:]} stream: {e}") from e
     raise PdfError(f"unsupported stream filter: {name}")
 
 

@@ -1176,7 +1176,7 @@ def decode_png(data: bytes) -> np.ndarray:
         raise ValueError("not a PNG")
     pos = 8
     w = h = depth = color_type = interlace = None
-    idat = b""
+    idat: list[bytes] = []
     plte = None
     trns = None
     while pos + 8 <= len(data):
@@ -1193,7 +1193,7 @@ def decode_png(data: bytes) -> np.ndarray:
         elif tag == b"tRNS":
             trns = body
         elif tag == b"IDAT":
-            idat += body
+            idat.append(body)
         elif tag == b"IEND":
             break
     if w is None or w == 0 or h == 0:
@@ -1202,28 +1202,28 @@ def decode_png(data: bytes) -> np.ndarray:
         raise ValueError(f"unsupported PNG color type {color_type} / depth {depth}")
     if interlace not in (0, 1):
         raise ValueError(f"unsupported PNG interlace {interlace}")
-    if w * h > 64_000_000:
-        raise ValueError(f"PNG {w}x{h} exceeds the 64MP decode guard")
+    budget.check_pixels("PNG", w, h)
     nch = _PNG_CHANNELS[color_type]
     bpp_bits = depth * nch
+    # Adam7 is seven independently-filtered sub-images; a plain image is one
+    passes = []
+    for x0, y0, dx, dy in _ADAM7 if interlace else ((0, 0, 1, 1),):
+        pw = (w - x0 + dx - 1) // dx
+        ph = (h - y0 + dy - 1) // dy
+        if pw and ph:
+            passes.append((x0, y0, dx, dy, pw, ph))
+    # the header declares the stream's size: a filter byte plus the packed
+    # samples per row of every pass
+    size = sum(ph * (1 + (pw * bpp_bits + 7) // 8) for *_, pw, ph in passes)
     try:
-        raw = zlib.decompress(idat)
+        raw = budget.inflate(b"".join(idat), size)
     except zlib.error as e:
         raise ValueError(f"bad PNG IDAT stream: {e}") from e
-
-    if interlace == 0:
-        rows, _ = _png_unfilter(raw, 0, w, h, bpp_bits)
-        samples = _png_samples(rows, w, depth, nch)
-    else:  # Adam7: seven independently-filtered sub-images
-        samples = np.zeros((h, w, nch), dtype=np.uint8)
-        off = 0
-        for x0, y0, dx, dy in _ADAM7:
-            pw = (w - x0 + dx - 1) // dx
-            ph = (h - y0 + dy - 1) // dy
-            if pw == 0 or ph == 0:
-                continue
-            rows, off = _png_unfilter(raw, off, pw, ph, bpp_bits)
-            samples[y0::dy, x0::dx] = _png_samples(rows, pw, depth, nch)
+    samples = np.zeros((h, w, nch), dtype=np.uint8)
+    off = 0
+    for x0, y0, dx, dy, pw, ph in passes:
+        rows, off = _png_unfilter(raw, off, pw, ph, bpp_bits)
+        samples[y0::dy, x0::dx] = _png_samples(rows, pw, depth, nch)
 
     def _scale(v: np.ndarray) -> np.ndarray:
         if depth >= 8:
@@ -1307,8 +1307,9 @@ def decode_bmp(data: bytes) -> np.ndarray:
     (compression,) = struct.unpack("<I", data[30:34])
     flip = h > 0
     h = abs(h)
-    if w <= 0 or h <= 0 or w * h > 64_000_000:
-        raise ValueError(f"BMP {w}x{h} exceeds the 64MP decode guard")
+    if w <= 0 or h <= 0:
+        raise ValueError(f"empty BMP {w}x{h}")
+    budget.check_pixels("BMP", w, h)
     if bpp == 32 and compression in (0, 3):
         # BGRA (BI_RGB) or BI_BITFIELDS; alpha composited over white like
         # every other format here
@@ -1427,59 +1428,70 @@ def _tiff_tag_values(data: bytes, entry: bytes, e: str) -> list[int]:
     return list(struct.unpack(e + fmt * cnt, raw[:total]))
 
 
-def _tiff_lzw_decode(data: bytes) -> bytes:
-    """TIFF-variant LZW (spec §13): MSB-first codes, 8-bit roots, EarlyChange
-    code-width bumps at table size 2^n - 1."""
-    CLEAR, EOI = 256, 257
+def lzw_decode(data: bytes, root_bits: int, *, msb: bool, early: int, max_out: int) -> bytes:
+    """LZW for TIFF (spec §13), PDF ``/LZWDecode`` and GIF, producing at
+    most ``max_out`` bytes. CLEAR is ``1 << root_bits``, EOI the code after
+    it; ``msb`` packs codes MSB-first (TIFF, PDF) rather than LSB-first
+    (GIF); ``early`` is 1 where the code width grows one entry early (TIFF,
+    PDF EarlyChange), 0 for GIF. The table stops at the 4096 entries 12-bit
+    codes can address. A code past the table raises ValueError."""
+    if not 0 <= root_bits <= 8:
+        raise ValueError(f"bad LZW root code size {root_bits}")
+    clear = 1 << root_bits
+    roots = [bytes([i]) for i in range(clear)] + [b"", b""]
+    table = roots[:]
+    width = root_bits + 1
     out = bytearray()
-    table: list[bytes] = []
-
-    def reset():
-        nonlocal table, width
-        table = [bytes([i]) for i in range(256)] + [b"", b""]
-        width = 9
-
-    width = 9
-    reset()
-    buf = 0
-    nbits = 0
+    buf = nbits = 0
     prev: bytes | None = None
     for byte in data:
-        buf = (buf << 8) | byte
+        if msb:
+            buf = (buf << 8) | byte
+        else:
+            buf |= byte << nbits
         nbits += 8
         while nbits >= width:
-            code = (buf >> (nbits - width)) & ((1 << width) - 1)
             nbits -= width
-            if code == CLEAR:
-                reset()
+            if msb:
+                code = buf >> nbits
+                buf &= (1 << nbits) - 1
+            else:
+                code = buf & ((1 << width) - 1)
+                buf >>= width
+            if code == clear:
+                table = roots[:]
+                width = root_bits + 1
                 prev = None
                 continue
-            if code == EOI:
+            if code == clear + 1:
                 return bytes(out)
-            if prev is None:
-                if code >= len(table):
-                    raise ValueError("bad first LZW code in TIFF stream")
+            if code < len(table):
                 entry = table[code]
-            elif code < len(table):
-                entry = table[code]
-                table.append(prev + entry[:1])
-            elif code == len(table):
+                if prev is not None and len(table) < 4096:
+                    table.append(prev + entry[:1])
+            elif code == len(table) and prev is not None:
                 entry = prev + prev[:1]
                 table.append(entry)
             else:
-                raise ValueError("corrupt TIFF LZW stream")
+                raise ValueError(f"LZW code {code} is past the table ({len(table)} entries)")
             out += entry
+            if len(out) >= max_out:
+                return bytes(out[:max_out])
             prev = entry
-            if len(table) == (1 << width) - 1 and width < 12:  # EarlyChange
+            if len(table) + early == 1 << width and width < 12:
                 width += 1
     return bytes(out)
 
 
-def _tiff_packbits_decode(data: bytes, expect: int) -> bytes:
+def packbits_decode(data: bytes, max_out: int, *, eod: bool = False) -> bytes:
+    """PackBits (TIFF) and PDF RunLengthDecode, which differ only in the
+    128 header byte: a no-op in PackBits, end of data when ``eod``. Stops
+    once ``max_out`` bytes are out; the last run may pass it by at most 128
+    bytes."""
     out = bytearray()
     pos = 0
     n = len(data)
-    while pos < n and len(out) < expect:
+    while pos < n and len(out) < max_out:
         b = data[pos]
         pos += 1
         if b < 128:
@@ -1490,7 +1502,8 @@ def _tiff_packbits_decode(data: bytes, expect: int) -> bytes:
                 raise ValueError("truncated PackBits run")
             out += bytes([data[pos]]) * (257 - b)
             pos += 1
-        # 128 = no-op
+        elif eod:
+            break
     return bytes(out)
 
 
@@ -1523,8 +1536,7 @@ def decode_tiff(data: bytes) -> np.ndarray:
     w, h = one(256), one(257)
     if not w or not h:
         raise ValueError("TIFF missing dimensions")
-    if w * h > 64_000_000:
-        raise ValueError(f"TIFF {w}x{h} exceeds the 64MP decode guard")
+    budget.check_pixels("TIFF", w, h)
     spp = one(277, 1)
     bps = tags.get(258, [8])
     if spp not in (1, 3) or any(b != 8 for b in bps[:spp]):
@@ -1547,9 +1559,9 @@ def decode_tiff(data: bytes) -> np.ndarray:
         if comp == 1:
             raw += strip[:expect]
         elif comp == 5:
-            raw += _tiff_lzw_decode(strip)[:expect]
+            raw += lzw_decode(strip, 8, msb=True, early=1, max_out=expect)
         elif comp == 32773:
-            raw += _tiff_packbits_decode(strip, expect)
+            raw += packbits_decode(strip, expect)
         else:
             raise ValueError(f"unsupported TIFF compression {comp}")
     if len(raw) < w * h * spp:
@@ -1600,47 +1612,14 @@ def _gif_lzw_decode_fast9(data: bytes) -> bytes | None:
     return data_codes.astype(np.uint8).tobytes()
 
 
-def _gif_lzw_decode(data: bytes, min_code_size: int) -> bytes:
-    """Full GIF LZW decoder."""
+def _gif_lzw_decode(data: bytes, min_code_size: int, max_out: int = budget.MAX_PIXELS) -> bytes:
+    """A GIF frame's LZW stream, at most ``max_out`` bytes of it: the 9-bit
+    fast path when the stream allows it, the general decoder otherwise."""
     if min_code_size == 8:
         fast = _gif_lzw_decode_fast9(data)
         if fast is not None:
-            return fast
-    clear = 1 << min_code_size
-    end = clear + 1
-    out = bytearray()
-    table: list[bytes] = [bytes([i]) for i in range(clear)] + [b"", b""]
-    code_size = min_code_size + 1
-    buf = 0
-    nbits = 0
-    prev: bytes | None = None
-    for byte in data:
-        buf |= byte << nbits
-        nbits += 8
-        while nbits >= code_size:
-            code = buf & ((1 << code_size) - 1)
-            buf >>= code_size
-            nbits -= code_size
-            if code == clear:
-                table = [bytes([i]) for i in range(clear)] + [b"", b""]
-                code_size = min_code_size + 1
-                prev = None
-                continue
-            if code == end:
-                return bytes(out)
-            if prev is None:
-                entry = table[code]
-            elif code < len(table):
-                entry = table[code]
-                table.append(prev + entry[:1])
-            else:
-                entry = prev + prev[:1]
-                table.append(entry)
-            out += entry
-            prev = entry
-            if len(table) == (1 << code_size) and code_size < 12:
-                code_size += 1
-    return bytes(out)
+            return fast[:max_out]
+    return lzw_decode(data, min_code_size, msb=False, early=0, max_out=max_out)
 
 
 def encode_gif(gray: np.ndarray) -> bytes:
@@ -1687,8 +1666,9 @@ def decode_gif(data: bytes) -> np.ndarray:
     if data[:4] != b"GIF8":
         raise ValueError("not a GIF")
     w, h, flags = struct.unpack("<HHB", data[6:11])
-    if w == 0 or h == 0 or w * h > 64_000_000:
-        raise ValueError(f"GIF {w}x{h} exceeds the 64MP decode guard")
+    if w == 0 or h == 0:
+        raise ValueError(f"empty GIF {w}x{h}")
+    budget.check_pixels("GIF", w, h)
     pos = 13
     palette = None
     if flags & 0x80:
@@ -1711,7 +1691,8 @@ def decode_gif(data: bytes) -> np.ndarray:
                 ln = data[pos]
                 lzw += data[pos + 1 : pos + 1 + ln]
                 pos += 1 + ln
-            idx = np.frombuffer(_gif_lzw_decode(bytes(lzw), min_code)[: iw * ih], dtype=np.uint8)
+            budget.check_pixels("GIF frame", iw, ih)
+            idx = np.frombuffer(_gif_lzw_decode(bytes(lzw), min_code, iw * ih), dtype=np.uint8)
             rgb = palette[np.minimum(idx, len(palette) - 1)].reshape(ih, iw, 3)
             if iflags & 0x40:  # interlaced: rows arrive in 4-pass order
                 out = np.empty_like(rgb)
@@ -1735,6 +1716,14 @@ def decode_gif(data: bytes) -> np.ndarray:
 
 
 _STUB_TAG = b"ASOS"  # marks the embedded deterministic raster in stub formats
+
+
+def _stub_raster(stream: bytes, w: int, h: int) -> np.ndarray:
+    """A stub container's deflated raster; inflating one byte past ``h * w``
+    keeps a stream longer than its header claims failing the reshape."""
+    budget.check_pixels("stub raster", w, h)
+    raw = budget.inflate(stream, h * w + 1)
+    return np.frombuffer(raw, dtype=np.uint8).reshape(h, w).copy()
 
 
 def encode_jpeg_stub(gray: np.ndarray) -> bytes:
@@ -1768,7 +1757,7 @@ def decode_jpeg_stub(data: bytes) -> np.ndarray:
     if payload[:4] != _STUB_TAG:
         raise ValueError("not a stub JPEG")
     w, h = struct.unpack(">II", payload[4:12])
-    return np.frombuffer(zlib.decompress(bytes(payload[12:])), dtype=np.uint8).reshape(h, w).copy()
+    return _stub_raster(bytes(payload[12:]), w, h)
 
 
 def decode_jpeg(data: bytes) -> np.ndarray:
@@ -1804,7 +1793,7 @@ def decode_webp_stub(data: bytes) -> np.ndarray:
         body = data[pos + 8 : pos + 8 + ln]
         if tag == b"GRAY" and body[:4] == _STUB_TAG:
             w, h = struct.unpack(">II", body[4:12])
-            return np.frombuffer(zlib.decompress(body[12:]), dtype=np.uint8).reshape(h, w).copy()
+            return _stub_raster(body[12:], w, h)
         pos += 8 + ln + (ln % 2)
     raise ValueError("not a stub WEBP")
 

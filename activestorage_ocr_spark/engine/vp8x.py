@@ -32,7 +32,7 @@ import struct
 
 import numpy as np
 
-from . import vp8_tables as T
+from . import budget, vp8_tables as T
 
 # ---------------------------------------------------------------------------
 # boolean decoder (§7) — bits are decoded against 8-bit probabilities
@@ -769,16 +769,9 @@ def decode_frame_planes(data: bytes):
         raise ValueError("bad VP8 keyframe start code")
     w = (data[6] | (data[7] << 8)) & 0x3FFF
     h = (data[8] | (data[9] << 8)) & 0x3FFF
-    if w == 0 or h == 0 or w * h > 64_000_000:
-        raise ValueError(f"VP8 {w}x{h} exceeds the 64MP decode guard")
     if w == 0 or h == 0:
         raise ValueError("empty VP8 frame")
-    # decode-bomb guard: a corrupt header can declare up to 16383x16383;
-    # cap total pixels well above any sane crawl image but far below the
-    # point where the MB loop becomes a denial-of-service (same posture as
-    # the extraction pipeline's size gate, P3)
-    if w * h > 64_000_000:
-        raise ValueError(f"VP8 frame {w}x{h} exceeds the 64MP decode guard")
+    budget.check_pixels("VP8 frame", w, h)  # a header can declare 16383x16383
     if 10 + first_part_size > len(data):
         raise ValueError("VP8 first partition overruns frame")
     mb_w, mb_h = (w + 15) >> 4, (h + 15) >> 4

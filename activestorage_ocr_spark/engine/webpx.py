@@ -27,6 +27,8 @@ import struct
 
 import numpy as np
 
+from . import budget
+
 # order in which code-length code lengths are stored (spec §6.2.2)
 _CL_ORDER = (17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15)
 
@@ -449,8 +451,7 @@ def _decode_vp8l(payload: bytes) -> np.ndarray:
     bits = _Bits(payload[1:])
     w = bits.read(14) + 1
     h = bits.read(14) + 1
-    if w * h > 64_000_000:
-        raise ValueError(f"VP8L {w}x{h} exceeds the 64MP decode guard")
+    budget.check_pixels("VP8L", w, h)
     bits.read(1)  # alpha hint
     if bits.read(3) != 0:
         raise ValueError("unsupported VP8L version")
@@ -526,8 +527,7 @@ def decode_webp(data: bytes) -> np.ndarray:
             # canvas size: 24-bit LE width-1 / height-1 after flags+reserved
             cw = int.from_bytes(body[4:7], "little") + 1
             ch = int.from_bytes(body[7:10], "little") + 1
-            if cw * ch > 64_000_000:
-                raise ValueError(f"VP8X canvas {cw}x{ch} exceeds the 64MP decode guard")
+            budget.check_pixels("VP8X canvas", cw, ch)
             canvas_wh = (cw, ch)
         if tag == b"VP8L":
             return decode_vp8l(body)

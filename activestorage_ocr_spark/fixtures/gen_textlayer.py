@@ -103,7 +103,6 @@ def make_textlayer_payload(i: int) -> bytes:
             b"<< /Type /Encoding /Differences [ 128 /eacute /emdash ] >>",
         )
     if kind == "lzw":
-        from ..engine.rasters import _tiff_lzw_decode  # noqa: F401  (decoder side)
         from .gen_textlayer import _lzw_encode
 
         content = _lzw_encode(b"BT /F1 10 Tf (" + base.encode() + b") Tj ET")

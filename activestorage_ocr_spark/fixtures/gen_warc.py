@@ -76,7 +76,9 @@ def ensure_warc_fixture(n_docs: int, base: str = "/tmp/asos_spark_corpus") -> st
     # damage inside the uncompressed record instead)
     import gzip as _gz
 
-    raw = _gz.decompress(open(paths[0], "rb").read())  # members concat-decode
+    write_warc(paths[0], shards[0], per_record_gzip=False)
+    with open(paths[0], "rb") as f:
+        raw = f.read()
     idx = raw.find(b"WARC/1.0", 1)
     raw = raw[:idx] + b"XXXX/9.9" + raw[idx + 8 :]
     with open(paths[0], "wb") as f:

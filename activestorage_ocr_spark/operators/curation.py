@@ -161,10 +161,9 @@ def read_curated(spark: SparkSession, out_dir: str) -> DataFrame:
 
 
 def read_rejected(spark: SparkSession, out_dir: str) -> DataFrame:
-    p = os.path.join(out_dir, "data", "outcome=rejected")
-    if os.path.exists(p):
-        try:
-            return spark.read.parquet(p)
-        except Exception:
-            pass
-    return read_curated(spark, out_dir).limit(0)
+    """Rejected rows of every run; empty when there are none. Both outcomes
+    are partitions of one write, so reading them through ``data`` gives the
+    rejected rows that write's schema even where no rejected footer
+    exists."""
+    data = spark.read.parquet(os.path.join(out_dir, "data"))
+    return data.where(F.col("outcome") == "rejected").drop("outcome")

@@ -106,16 +106,19 @@ def ensure_workers_can_import(spark) -> None:
     key = id(spark.sparkContext)
     if key in _PYFILES_SESSIONS:
         return
+    import sys
+
+    if _repo_root() not in sys.path:
+        sys.path.insert(0, _repo_root())
     try:
-        import sys
-
-        sys.path.insert(0, _repo_root()) if _repo_root() not in sys.path else None
         from jobs.package import build  # noqa: PLC0415
-
+    except ModuleNotFoundError as e:
+        # no jobs/ on disk (an installed package): the workers import the
+        # package the way the driver did (PYTHONPATH, sources/session.py)
+        if e.name not in ("jobs", "jobs.package"):
+            raise
+    else:
         spark.sparkContext.addPyFile(build())
-    except Exception:
-        # best effort — PYTHONPATH (sources/session.py) usually covers it
-        pass
     _PYFILES_SESSIONS.add(key)
 
 

@@ -394,7 +394,8 @@ def encode_fake_video(frames: list[bytes], frame_ms: int = 40) -> bytes:
 
 def _iter_fake_video_frames(data: bytes):
     import struct as _s
-    import zlib as _z
+
+    from ..engine import budget
 
     if data[:4] != _VIDEO_MAGIC:
         raise NotImplementedError(
@@ -405,7 +406,8 @@ def _iter_fake_video_frames(data: bytes):
     pos = 12
     for i in range(n):
         (ln,) = _s.unpack("<I", data[pos : pos + 4])
-        yield i, i * frame_ms, _z.decompress(data[pos + 4 : pos + 4 + ln])
+        frame = data[pos + 4 : pos + 4 + ln]
+        yield i, i * frame_ms, budget.metered(lambda n: budget.inflate(frame, n))
         pos += 4 + ln
 
 

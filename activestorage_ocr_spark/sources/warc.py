@@ -47,6 +47,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..engine import budget
 from .session import install_zip_cache_guard
 
 __all__ = ["read_warc", "to_pages", "write_warc", "parse_warc_stream", "WARC_ARROW"]
@@ -74,6 +75,8 @@ WARC_SPARK_SCHEMA = (
 DEFAULT_MAX_PAYLOAD = 64 * 1024 * 1024
 
 _CRLF = b"\r\n"
+#: zlib window bits to try, per Content-Encoding
+_WBITS = {"gzip": (31,), "x-gzip": (31,), "deflate": (zlib.MAX_WBITS, -zlib.MAX_WBITS)}
 _VERSION_PREFIXES = (b"WARC/1.0", b"WARC/1.1")
 
 
@@ -113,32 +116,29 @@ def _dechunk(body: bytes) -> bytes:
     return bytes(out)
 
 
-def _decode_content(body: bytes, encoding: str | None) -> bytes:
+def _decode_content(body: bytes, encoding: str | None, max_out: int) -> bytes:
     """Undo Content-Encoding gzip/x-gzip/deflate (the encodings a crawl's
     raw HTTP captures actually carry). Unknown encodings (br without a
-    brotli module, compress) and decode failures keep the raw bytes —
-    downstream MIME sniffing quarantines honestly."""
-    if not encoding:
-        return body
-    enc = encoding.lower().strip()
-    try:
-        if enc in ("gzip", "x-gzip"):
-            return gzip.decompress(body)
-        if enc == "deflate":
-            try:
-                return zlib.decompress(body)
-            except zlib.error:
-                return zlib.decompress(body, -zlib.MAX_WBITS)  # raw deflate
-    except (OSError, zlib.error, EOFError):
-        return body
+    brotli module, compress), decode failures and bodies that decode past
+    ``max_out`` bytes (decode-bomb guard) keep the raw bytes — downstream
+    MIME sniffing quarantines honestly."""
+    enc = (encoding or "").lower().strip()
+    # deflate is zlib-wrapped per the RFC, raw from many servers: try both
+    for wbits in _WBITS.get(enc, ()):
+        try:
+            out = budget.inflate(body, max_out + 1, wbits)  # +1 shows an overrun
+        except zlib.error:
+            continue
+        return body if len(out) > max_out else out
     return body
 
 
-def _split_http_response(block: bytes):
+def _split_http_response(block: bytes, max_out: int):
     """(status, content_type, content_language, body) from an HTTP response
     block; (None, None, None, block) when it isn't one. Chunked transfer
-    framing is removed and gzip/deflate content encodings are undone, so
-    ``html`` always holds the entity bytes the browser would parse."""
+    framing is removed and gzip/deflate content encodings are undone (up to
+    ``max_out`` decoded bytes), so ``html`` always holds the entity bytes
+    the browser would parse."""
     head_end = block.find(b"\r\n\r\n")
     if head_end == -1 or not block.startswith(b"HTTP/"):
         return None, None, None, block
@@ -162,7 +162,7 @@ def _split_http_response(block: bytes):
     body = block[head_end + 4 :]
     if tenc and "chunked" in tenc.lower():
         body = _dechunk(body)
-    body = _decode_content(body, cenc)
+    body = _decode_content(body, cenc, max_out)
     return status, ctype, lang, body
 
 
@@ -216,7 +216,7 @@ def parse_warc_stream(
             return  # truncated final record
         if headers.get("warc-type") != "response":
             continue
-        status, ctype, lang, body = _split_http_response(block)
+        status, ctype, lang, body = _split_http_response(block, max_payload_bytes)
         yield {
             "url": headers.get("warc-target-uri"),
             "warc_ts": _parse_warc_date(headers.get("warc-date", "")),

@@ -1,19 +1,17 @@
 #!/usr/bin/env python3
-"""Extra benchmarks for the optimization rounds (guide §1.4 noop-sink
-isolation). NOT the frozen driver bench — `bench.py` stays the measured
-contract; this file exists so per-query numbers and plans can be
-captured without touching it.
+"""Side tools next to the frozen driver bench (`bench.py` stays the
+measured contract). Query timing lives in
+`perfbench/run.py --workload query-suite`.
 
 Usage:
-  python bench_extra.py [query ...]            # time the named queries
-  python bench_extra.py --explain DIR [q ...]  # also dump .explain("formatted")
-  python bench_extra.py --runs N [q ...]
-  python bench_extra.py --task-overhead        # ms per empty Python task
+  python bench_extra.py --explain DIR [query ...]  # write each query's
+                                                   # .explain("formatted") to
+                                                   # DIR/<query>.txt (default:
+                                                   # every registered query)
+  python bench_extra.py --task-overhead            # ms per empty Python task
 
 Env (same contract as bench.py): SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1), SPARK_GRAFT_CPUS (default 32). Methodology matches
-bench.py exactly: one warm run, clearCache, one timed run per repeat,
-noop sink.
+/root/testdata/sf0.1), SPARK_GRAFT_CPUS (default 32).
 """
 
 from __future__ import annotations
@@ -29,16 +27,6 @@ sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-DEFAULT = [
-    "dedup_lsh_pairs",
-    "decontaminate_ngrams",
-    "sim_topk",
-    "curation_keep_list",
-    "dedup_spans",
-    "conf_full",
-]
-
 
 def _empty_task(batches):
     yield from batches
@@ -82,16 +70,30 @@ def task_overhead(spark, reps: int = 3) -> dict:
     return {"tasks": n, "stock_ms_per_task": stock, "guarded_ms_per_task": guarded}
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("queries", nargs="*", default=None)
-    ap.add_argument("--runs", type=int, default=1)
-    ap.add_argument("--explain", metavar="DIR", default=None)
-    ap.add_argument("--task-overhead", action="store_true")
-    args = ap.parse_args()
-    names = args.queries or DEFAULT
+def explain(spark, out_dir: str, names: list[str]) -> None:
+    """Write each query's formatted physical plan to ``out_dir``; runs none."""
+    import contextlib
+    import io
 
     from activestorage_ocr_spark.plans.queries import QUERIES
+
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names or sorted(QUERIES):
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            QUERIES[name](spark, SF_DIR).explain("formatted")
+        with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
+            f.write(buf.getvalue())
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("queries", nargs="*", help="queries to explain (default: all)")
+    mode = ap.add_mutually_exclusive_group(required=True)
+    mode.add_argument("--explain", metavar="DIR")
+    mode.add_argument("--task-overhead", action="store_true")
+    args = ap.parse_args()
+
     from activestorage_ocr_spark.sources.session import build_session
 
     spark = build_session(
@@ -101,41 +103,13 @@ def main() -> None:
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
-    if args.task_overhead:
-        try:
-            print(json.dumps({"cpus": CPUS, "task_overhead": task_overhead(spark)}))
-        finally:
-            spark.stop()
-        return
-    out = {}
     try:
-        for name in names:
-            q = QUERIES[name]
-            if args.explain:
-                os.makedirs(args.explain, exist_ok=True)
-                import contextlib
-                import io
-
-                buf = io.StringIO()
-                with contextlib.redirect_stdout(buf):
-                    q(spark, SF_DIR).explain("formatted")
-                with open(os.path.join(args.explain, f"{name}.txt"), "w") as f:
-                    f.write(buf.getvalue())
-            spark.sparkContext.setJobDescription(f"bench_extra warm {name}")
-            q(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            spark.catalog.clearCache()
-            runs = []
-            for i in range(args.runs):
-                spark.sparkContext.setJobDescription(f"bench_extra {name} run{i}")
-                t0 = time.perf_counter()
-                q(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-                runs.append(round(time.perf_counter() - t0, 3))
-                spark.catalog.clearCache()
-            out[name] = runs if args.runs > 1 else runs[0]
-            print(f"# {name}: {runs}", file=sys.stderr)
+        if args.task_overhead:
+            print(json.dumps({"cpus": CPUS, "task_overhead": task_overhead(spark)}))
+        else:
+            explain(spark, args.explain, args.queries)
     finally:
         spark.stop()
-    print(json.dumps({"sf_dir": SF_DIR, "cpus": CPUS, "queries": out}))
 
 
 if __name__ == "__main__":

@@ -138,3 +138,28 @@ class TestFullPipeline:
         assert rejected.count() == 10
         reasons = {r.reject_reason for r in rejected.collect()}
         assert reasons == {curation.REJECT_DUP}
+
+
+class TestReadRejected:
+    def _write(self, spark, out, outcomes):
+        rows = [(i, f"text {i}", o, i % 2) for i, o in enumerate(outcomes)]
+        df = spark.createDataFrame(rows, "doc_id long, text string, outcome string, part_key int")
+        df.write.partitionBy("outcome", "part_key").parquet(f"{out}/data")
+
+    def test_missing_or_empty_rejected_dir_reads_as_empty(self, spark, tmp_path):
+        out = str(tmp_path / "cur")
+        self._write(spark, out, ["curated", "curated"])
+        assert curation.read_rejected(spark, out).count() == 0
+        (tmp_path / "cur" / "data" / "outcome=rejected").mkdir()
+        rejected = curation.read_rejected(spark, out)
+        assert rejected.count() == 0
+        assert rejected.columns == curation.read_curated(spark, out).columns
+
+    def test_unreadable_rejected_part_surfaces(self, spark, tmp_path):
+        out = str(tmp_path / "cur")
+        self._write(spark, out, ["curated"])
+        bad = tmp_path / "cur" / "data" / "outcome=rejected" / "part_key=0"
+        bad.mkdir(parents=True)
+        (bad / "part-00000.parquet").write_bytes(b"not a parquet file")
+        with pytest.raises(Exception, match="(?i)parquet"):
+            curation.read_rejected(spark, out).collect()

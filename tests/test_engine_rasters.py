@@ -535,6 +535,13 @@ class TestDimensionBombGuards:
         with pytest.raises(ValueError, match="64MP"):
             rasters.decode_gif(gif)
 
+    def test_jpeg_bomb(self):
+        import struct
+
+        sof = b"\xff\xc0" + struct.pack(">HBHHB", 11, 8, 0xFFFF, 0xFFFF, 1) + b"\x01\x11\x00"
+        with pytest.raises(ValueError, match="64MP"):
+            rasters.decode_jpeg(b"\xff\xd8" + sof + b"\xff\xd9")
+
     def test_vp8l_bomb(self):
         import struct
 

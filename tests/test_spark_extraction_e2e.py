@@ -277,3 +277,38 @@ class TestKernelPasses:
         want = off.filter(deferred)
         for col in ("url", "extracted_text", "status", "n_bytes", "chars_out", "spans"):
             assert finished.column(col).equals(want.column(col)), col
+
+
+class TestEnsureWorkersCanImport:
+    """The package zip is built from ``jobs/package.py`` when the repo is on
+    disk; only a missing ``jobs`` package is skipped, never a real error."""
+
+    class _Spark:
+        def __init__(self):
+            self.added = []
+            self.sparkContext = self
+
+        def addPyFile(self, path):  # noqa: N802 — SparkContext's name
+            self.added.append(path)
+
+    def test_missing_jobs_package_is_skipped(self, monkeypatch):
+        import sys
+
+        from activestorage_ocr_spark.operators import extraction
+
+        monkeypatch.setitem(sys.modules, "jobs.package", None)  # as if not on disk
+        spark = self._Spark()
+        extraction.ensure_workers_can_import(spark)
+        assert spark.added == []
+
+    def test_build_failure_surfaces(self, monkeypatch):
+        import jobs.package
+
+        from activestorage_ocr_spark.operators import extraction
+
+        def broken_build():
+            raise OSError("disk full")
+
+        monkeypatch.setattr(jobs.package, "build", broken_build)
+        with pytest.raises(OSError, match="disk full"):
+            extraction.ensure_workers_can_import(self._Spark())
