@@ -35,7 +35,7 @@ import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
-from ..sources.session import install_zip_cache_guard
+from ..sources.session import ensure_workers_can_import, install_zip_cache_guard
 
 #: Output schema of the extraction kernel; the Spark schemas below derive
 #: from it. Timing fields are excluded from byte-identity comparison
@@ -73,8 +73,6 @@ OK_STATUSES = ("ok", "empty")
 #: many payload bytes (giant-page memory guard; SURVEY.md §7.3).
 KERNEL_SLICE_BYTES = 64 * 1024 * 1024
 
-_PYFILES_SESSIONS: set[int] = set()
-
 #: ISO-639-1 -> tesseract-style codes, so a crawl's 2-letter lang column
 #: maps onto the engine's language packs.
 _ISO_LANG = {
@@ -95,37 +93,6 @@ def _lang_request(lang: str | None) -> str | None:
 
     mapped = _ISO_LANG.get(lang.lower(), lang)
     return mapped if mapped in SUPPORTED_LANGUAGES else None
-
-
-def ensure_workers_can_import(spark) -> None:
-    """Ship the package zip to Python workers via ``addPyFile`` (idempotent
-    per session). Kernels are unpickled *by import* in the workers, so the
-    package must be importable there even when the driver session was built
-    by an external harness from an arbitrary cwd. On clusters this is the
-    ``--py-files`` zip; locally we build and add it on demand."""
-    key = id(spark.sparkContext)
-    if key in _PYFILES_SESSIONS:
-        return
-    import sys
-
-    if _repo_root() not in sys.path:
-        sys.path.insert(0, _repo_root())
-    try:
-        from jobs.package import build  # noqa: PLC0415
-    except ModuleNotFoundError as e:
-        # no jobs/ on disk (an installed package): the workers import the
-        # package the way the driver did (PYTHONPATH, sources/session.py)
-        if e.name not in ("jobs", "jobs.package"):
-            raise
-    else:
-        spark.sparkContext.addPyFile(build())
-    _PYFILES_SESSIONS.add(key)
-
-
-def _repo_root() -> str:
-    import os
-
-    return os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 #: What pass 1 emits for a row it defers to pass 2, besides url, lang,

@@ -15,17 +15,12 @@ posture as the extraction pipeline.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
-from ..sources.session import install_zip_cache_guard
-
-IMAGE_META_SCHEMA = (
-    "url string, mime string, width int, height int, n_pixels bigint, "
-    "ink_ratio double, decoder string, decode_error string"
-)
+from ..sources.session import map_rows
 
 
 def _container_kind(payload: bytes, mime: str) -> str:
@@ -56,7 +51,7 @@ IMAGE_META_ARROW = pa.schema(
 
 def image_meta_row(url: str, payload: bytes) -> dict | None:
     """Single-payload image metadata (pure; None for non-image payloads).
-    Shared by the Arrow kernel and the driver-side golden builder
+    Shared by `image_metadata` and the single-node golden generator
     (fixtures/gen_media.py) so the oracle is the single-node execution of
     the identical per-payload semantics."""
     from ..engine import mime as mimex, rasters
@@ -83,31 +78,20 @@ def image_meta_row(url: str, payload: bytes) -> dict | None:
     return row
 
 
-def _meta_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    install_zip_cache_guard()
-    out_schema = IMAGE_META_ARROW
-    for batch in batches:
-        urls = batch.column("url").to_pylist()
-        payloads = batch.column("html").to_pylist()
-        rows = {f.name: [] for f in out_schema}
-        for u, payload in zip(urls, payloads):
-            row = image_meta_row(u, payload)
-            if row is None:
-                continue
-            for f in out_schema:
-                rows[f.name].append(row[f.name])
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(rows[f.name], type=f.type) for f in out_schema], schema=out_schema
-        )
+def _at_most_one(meta_row: Callable[[str, bytes], dict | None]):
+    """A `map_rows` row function emitting ``meta_row``'s row, or no row
+    for a payload of another kind."""
+
+    def rows(url: str, payload: bytes) -> Iterable[dict]:
+        row = meta_row(url, payload)
+        return () if row is None else (row,)
+
+    return rows
 
 
 def image_metadata(pages: DataFrame) -> DataFrame:
     """(url, html) -> typed image metadata for image-sniffed payloads."""
-    from .extraction import ensure_workers_can_import
-
-    ensure_workers_can_import(pages.sparkSession)
-    proj = pages.select("url", "html")
-    return proj.mapInArrow(_meta_kernel, IMAGE_META_SCHEMA)
+    return map_rows(pages.select("url", "html"), _at_most_one(image_meta_row), IMAGE_META_ARROW)
 
 
 # ---------------------------------------------------------------------------
@@ -117,12 +101,6 @@ def image_metadata(pages: DataFrame) -> DataFrame:
 # media pipeline actually reads; full lossy decode stays out of scope and
 # malformed payloads land in decode_error, never a crash
 # ---------------------------------------------------------------------------
-
-AUDIO_META_SCHEMA = (
-    "url string, container string, sample_rate int, channels int, "
-    "bits_per_sample int, n_samples bigint, duration_ms bigint, decode_error string"
-)
-
 
 def parse_wav_header(data: bytes) -> dict:
     """Pure-stdlib RIFF/WAVE parse: fmt + data chunk walk (public format).
@@ -318,7 +296,7 @@ _AUDIO_META_COLS = ("sample_rate", "channels", "bits_per_sample", "n_samples", "
 
 def audio_meta_row(url: str, payload: bytes) -> dict | None:
     """Single-payload audio metadata (pure; None for non-audio payloads).
-    Shared by the Arrow kernel and the golden builder (fixtures/gen_media.py)."""
+    Shared by `audio_metadata` and the golden generator (fixtures/gen_media.py)."""
     kind = _sniff_audio(payload or b"")
     if kind is None:
         return None
@@ -338,34 +316,12 @@ def audio_meta_row(url: str, payload: bytes) -> dict | None:
     return row
 
 
-def _audio_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    install_zip_cache_guard()
-    out_schema = AUDIO_META_ARROW
-    for batch in batches:
-        urls = batch.column("url").to_pylist()
-        payloads = batch.column("audio").to_pylist()
-        rows = {f.name: [] for f in out_schema}
-        for u, payload in zip(urls, payloads):
-            row = audio_meta_row(u, payload)
-            if row is None:
-                continue
-            for f in out_schema:
-                rows[f.name].append(row[f.name])
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(rows[f.name], type=f.type) for f in out_schema], schema=out_schema
-        )
-
-
 def audio_metadata(df: DataFrame, payload_col: str = "audio") -> DataFrame:
     """(url, <payload_col>) -> typed audio metadata. Real parses for PCM WAV
     headers, mp3 frame headers (Xing/CBR duration), and Ogg Vorbis/Opus id
     headers; malformed payloads surface a decode_error (quarantine
     posture)."""
-    from .extraction import ensure_workers_can_import
-
-    ensure_workers_can_import(df.sparkSession)
-    proj = df.select("url", F.col(payload_col).alias("audio"))
-    return proj.mapInArrow(_audio_kernel, AUDIO_META_SCHEMA)
+    return map_rows(df.select("url", payload_col), _at_most_one(audio_meta_row), AUDIO_META_ARROW)
 
 
 # ---------------------------------------------------------------------------
@@ -374,7 +330,14 @@ def audio_metadata(df: DataFrame, payload_col: str = "audio") -> DataFrame:
 # the Spark-side schema / batch shape / sampling logic are real and tested.
 # ---------------------------------------------------------------------------
 
-VIDEO_FRAME_SCHEMA = "url string, frame_idx int, ts_ms bigint, frame binary"
+VIDEO_FRAME_ARROW = pa.schema(
+    [
+        pa.field("url", pa.string()),
+        pa.field("frame_idx", pa.int32()),
+        pa.field("ts_ms", pa.int64()),
+        pa.field("frame", pa.binary()),
+    ]
+)
 
 #: fake video container: b"ASVF" + u32 n_frames + u32 frame_ms + n_frames
 #: length-prefixed zlib'd grayscale rasters (test/corpus use only).
@@ -414,7 +377,7 @@ def _iter_fake_video_frames(data: bytes):
 def sample_video_frames(payload: bytes, every_ms: int) -> list[tuple[int, int, bytes]]:
     """Single-payload frame sampling (pure): ~one (idx, ts_ms, raw) per
     ``every_ms``; [] for undecodable payloads (quarantine posture). Shared by
-    the Arrow kernel and the golden builder (fixtures/gen_media.py)."""
+    `video_frame_sample` and the golden generator (fixtures/gen_media.py)."""
     out: list[tuple[int, int, bytes]] = []
     try:
         last_emitted = None
@@ -434,39 +397,12 @@ def video_frame_sample(df: DataFrame, every_ms: int = 1000, payload_col: str = "
     many frame rows, Arrow-batched). Decode is the clearly-marked fake;
     everything around it (schema, fan-out, per-payload error isolation) is
     the real plumbing."""
-    from .extraction import ensure_workers_can_import
 
-    ensure_workers_can_import(df.sparkSession)
-    proj = df.select("url", F.col(payload_col).alias("video"))
-    return proj.mapInArrow(_make_frame_kernel(every_ms), VIDEO_FRAME_SCHEMA)
+    def rows(url: str, payload: bytes) -> Iterable[dict]:
+        for idx, ts_ms, raw in sample_video_frames(payload, every_ms):
+            yield {"url": url, "frame_idx": idx, "ts_ms": ts_ms, "frame": raw}
 
-
-def _make_frame_kernel(every_ms: int):
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        install_zip_cache_guard()
-        out_schema = pa.schema(
-            [
-                pa.field("url", pa.string()),
-                pa.field("frame_idx", pa.int32()),
-                pa.field("ts_ms", pa.int64()),
-                pa.field("frame", pa.binary()),
-            ]
-        )
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            payloads = batch.column("video").to_pylist()
-            rows = {f.name: [] for f in out_schema}
-            for u, payload in zip(urls, payloads):
-                for idx, ts_ms, raw in sample_video_frames(payload, every_ms):
-                    rows["url"].append(u)
-                    rows["frame_idx"].append(idx)
-                    rows["ts_ms"].append(ts_ms)
-                    rows["frame"].append(raw)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(rows[f.name], type=f.type) for f in out_schema], schema=out_schema
-            )
-
-    return kernel
+    return map_rows(df.select("url", payload_col), rows, VIDEO_FRAME_ARROW)
 
 
 # ---------------------------------------------------------------------------
@@ -549,15 +485,10 @@ VIDEO_META_ARROW = pa.schema(
     ]
 )
 
-VIDEO_META_SCHEMA = (
-    "url string, container string, brand string, duration_ms bigint, "
-    "width int, height int, n_tracks int, decode_error string"
-)
-
 
 def video_meta_row(url: str, payload: bytes) -> dict | None:
     """Single-payload video metadata (pure; None for non-video payloads).
-    Shared by the Arrow kernel and the golden builder (fixtures/gen_media.py)."""
+    Shared by `video_metadata` and the golden generator (fixtures/gen_media.py)."""
     data = payload or b""
     row: dict = {"url": url, "container": None, "brand": None,
                  "duration_ms": None, "width": None, "height": None,
@@ -578,31 +509,9 @@ def video_meta_row(url: str, payload: bytes) -> dict | None:
     return None
 
 
-def _video_meta_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    install_zip_cache_guard()
-    out_schema = VIDEO_META_ARROW
-    for batch in batches:
-        urls = batch.column("url").to_pylist()
-        payloads = batch.column("video").to_pylist()
-        rows = {f.name: [] for f in out_schema}
-        for u, payload in zip(urls, payloads):
-            row = video_meta_row(u, payload)
-            if row is None:
-                continue
-            for f in out_schema:
-                rows[f.name].append(row[f.name])
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(rows[f.name], type=f.type) for f in out_schema], schema=out_schema
-        )
-
-
 def video_metadata(df: DataFrame, payload_col: str = "video") -> DataFrame:
     """(url, <payload_col>) -> typed video metadata: a real ISO-BMFF (MP4)
     box walk for dims/duration/track-count — no sample decode needed — plus
     the ASVF fake container; malformed mp4s surface a decode_error
     (quarantine posture). Map-only Arrow kernel."""
-    from .extraction import ensure_workers_can_import
-
-    ensure_workers_can_import(df.sparkSession)
-    proj = df.select("url", F.col(payload_col).alias("video"))
-    return proj.mapInArrow(_video_meta_kernel, VIDEO_META_SCHEMA)
+    return map_rows(df.select("url", payload_col), _at_most_one(video_meta_row), VIDEO_META_ARROW)

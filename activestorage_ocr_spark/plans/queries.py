@@ -2102,6 +2102,29 @@ def q_crawl_delta(spark, sf_dir):
     return joined.select("url", "fp_a", "fp_b", status.alias("status"))
 
 
+def _extract_fixture(spark, rows, engine=None, keep=()):
+    """Fixture payloads through the DISTRIBUTED pipeline: ``rows`` of (url,
+    lang, kind, payload) become a pages frame, run through `extract_pages`
+    with skew routing off (the fixture tables are tiny by construction),
+    and each row's fixture ``kind`` is broadcast-joined back. Columns: url,
+    the ``keep`` columns, kind, status, extracted_text, n_warnings."""
+    import datetime as _dt
+
+    from ..operators.extraction import extract_pages
+
+    ts = _dt.datetime(2024, 1, 1)
+    pages = spark.createDataFrame(
+        [(u, ts, p, lg) for u, lg, _k, p in rows],
+        "url string, warc_ts timestamp, html binary, lang string",
+    )
+    ex = extract_pages(pages, engine=engine, skew_handling="off")
+    kinds = spark.createDataFrame([(u, k) for u, _lg, k, _p in rows], "url string, kind string")
+    return ex.join(F.broadcast(kinds), "url").select(
+        "url", *keep, "kind", "status", "extracted_text",
+        F.size("warnings").alias("n_warnings"),
+    )
+
+
 def q_extract_scanned(spark, sf_dir):
     """The scanned-codec stack through the DISTRIBUTED pipeline: scanned
     PDFs whose images are CCITT G3/G4, JBIG2 (generic / globals / symbol /
@@ -2115,31 +2138,16 @@ def q_extract_scanned(spark, sf_dir):
     comparability; this table is their driver-level home.
 
     100 TB posture: identical to extract_flagship (the kernel is the same
-    Arrow batch code); skew routing off here because the table is tiny by
-    construction."""
-    import datetime as _dt
-
+    Arrow batch code); see `_extract_fixture`."""
     from ..fixtures.gen_scanned import (
         SCANNED_KINDS, scanned_counts, synthetic_scanned_rows,
     )
-    from ..operators.extraction import extract_pages
 
-    n = scanned_counts(_corpus_docs_for(sf_dir))
-    rows = synthetic_scanned_rows(n)
-    ts = _dt.datetime(2024, 1, 1)
-    pages = spark.createDataFrame(
-        [(u, ts, p, "eng") for u, p in rows],
-        "url string, warc_ts timestamp, html binary, lang string",
-    )
-    ex = extract_pages(pages, skew_handling="off")
-    kinds = spark.createDataFrame(
-        [(u, SCANNED_KINDS[i % len(SCANNED_KINDS)]) for i, (u, _) in enumerate(rows)],
-        "url string, kind string",
-    )
-    return ex.join(F.broadcast(kinds), "url").select(
-        "url", "kind", "status", "extracted_text",
-        F.size("warnings").cast("int").alias("n_warnings"),
-    )
+    rows = synthetic_scanned_rows(scanned_counts(_corpus_docs_for(sf_dir)))
+    return _extract_fixture(spark, [
+        (u, "eng", SCANNED_KINDS[i % len(SCANNED_KINDS)], p)
+        for i, (u, p) in enumerate(rows)
+    ])
 
 
 def q_extract_multilingual(spark, sf_dir):
@@ -2155,30 +2163,13 @@ def q_extract_multilingual(spark, sf_dir):
     parquet (fixtures/gen_multilingual.py).
 
     100 TB posture: identical to extract_flagship (same Arrow batch
-    kernel); skew routing off because the table is tiny by
-    construction."""
-    import datetime as _dt
-
+    kernel); see `_extract_fixture`."""
     from ..fixtures.gen_multilingual import (
         multilingual_counts, synthetic_multilingual_rows,
     )
-    from ..operators.extraction import extract_pages
 
-    n = multilingual_counts(_corpus_docs_for(sf_dir))
-    rows = synthetic_multilingual_rows(n)
-    ts = _dt.datetime(2024, 1, 1)
-    pages = spark.createDataFrame(
-        [(u, ts, p, lg) for u, lg, _k, p in rows],
-        "url string, warc_ts timestamp, html binary, lang string",
-    )
-    ex = extract_pages(pages, engine="pixelocr-alt", skew_handling="off")
-    kinds = spark.createDataFrame(
-        [(u, k) for u, _lg, k, _p in rows], "url string, kind string",
-    )
-    return ex.join(F.broadcast(kinds), "url").select(
-        "url", "lang", "kind", "status", "extracted_text",
-        F.size("warnings").cast("int").alias("n_warnings"),
-    )
+    rows = synthetic_multilingual_rows(multilingual_counts(_corpus_docs_for(sf_dir)))
+    return _extract_fixture(spark, rows, engine="pixelocr-alt", keep=("lang",))
 
 
 def q_robots_filter(spark, sf_dir):
@@ -2991,31 +2982,16 @@ def q_extract_textlayer(spark, sf_dir):
     against single-node golden parquet (fixtures/gen_textlayer.py).
 
     100 TB posture: identical to extract_flagship (same Arrow kernel);
-    skew routing off because the table is tiny by construction."""
-    import datetime as _dt
-
+    see `_extract_fixture`."""
     from ..fixtures.gen_textlayer import (
         TEXTLAYER_KINDS, synthetic_textlayer_rows, textlayer_counts,
     )
-    from ..operators.extraction import extract_pages
 
-    n = textlayer_counts(_corpus_docs_for(sf_dir))
-    rows = synthetic_textlayer_rows(n)
-    ts = _dt.datetime(2024, 1, 1)
-    pages = spark.createDataFrame(
-        [(u, ts, p, "eng") for u, p in rows],
-        "url string, warc_ts timestamp, html binary, lang string",
-    )
-    ex = extract_pages(pages, skew_handling="off")
-    kinds = spark.createDataFrame(
-        [(u, TEXTLAYER_KINDS[i % len(TEXTLAYER_KINDS)])
-         for i, (u, _) in enumerate(rows)],
-        "url string, kind string",
-    )
-    return ex.join(F.broadcast(kinds), "url").select(
-        "url", "kind", "status", "extracted_text",
-        F.size("warnings").alias("n_warnings"),
-    )
+    rows = synthetic_textlayer_rows(textlayer_counts(_corpus_docs_for(sf_dir)))
+    return _extract_fixture(spark, [
+        (u, "eng", TEXTLAYER_KINDS[i % len(TEXTLAYER_KINDS)], p)
+        for i, (u, p) in enumerate(rows)
+    ])
 
 
 QUERIES.update({"extract_textlayer": q_extract_textlayer})

@@ -74,14 +74,18 @@ def read_pages(spark: SparkSession, source: str) -> DataFrame:
     return spark.read.parquet(source)
 
 
-def read_pages_tuned(spark: SparkSession, source: str, *, tasks_per_core: int = 3) -> DataFrame:
+#: scan tasks per core that `read_pages_tuned` asks for
+TASKS_PER_CORE = 3
+
+
+def read_pages_tuned(spark: SparkSession, source: str) -> DataFrame:
     """Scan tuned for the CPU-bound extraction stage.
 
     Parquet-optimal split sizing (128 MB) assumes scan-bound work; the
     extraction kernel spends ~ms of CPU per KB of payload, so a 128 MB task
     is minutes of single-core decode — stragglers and idle cores at any
     cluster size whose core count exceeds input_bytes/128MB. Here we raise
-    ``spark.sql.files.minPartitionNum`` to ~``tasks_per_core`` tasks per
+    ``spark.sql.files.minPartitionNum`` to ~``TASKS_PER_CORE`` tasks per
     core so the map stage fills the cluster regardless of how few files the
     upstream writer produced.
 
@@ -93,7 +97,7 @@ def read_pages_tuned(spark: SparkSession, source: str, *, tasks_per_core: int = 
     which would shred every later scan in the session into fixed tiny
     splits."""
     cores = spark.sparkContext.defaultParallelism
-    spark.conf.set("spark.sql.files.minPartitionNum", str(cores * tasks_per_core))
+    spark.conf.set("spark.sql.files.minPartitionNum", str(cores * TASKS_PER_CORE))
     return read_pages(spark, source)
 
 

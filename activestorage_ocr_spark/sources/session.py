@@ -13,19 +13,40 @@ tests/bench so measured plans match shipped plans:
 * shuffle partitions sized to cores for local runs — on a real cluster this
   is set to ~2-3x total cores via spark-submit conf.
 
-The worker side of the environment lives here too: `install_zip_cache_guard`
-runs first thing in every Python kernel the package ships.
+The worker side of the environment lives here too: the package zip shipped
+to Python workers (`ensure_workers_can_import`), the zip import-cache guard
+every worker-side function installs first (`install_zip_cache_guard`,
+`zip_guarded`), and `map_rows`, the one Arrow kernel behind every row-wise
+operator. The extraction kernel (`operators/extraction.py`) is the only
+other ``mapInArrow`` in the package.
 """
 
 from __future__ import annotations
 
 import os
+import sys
+import weakref
 import zipimport
+from collections.abc import Callable, Iterable, Iterator
+from typing import Any
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark import SparkContext
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
 
 #: repo root (the package's parent) — exported to Python workers below
 _PKG_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+#: ``spark.sql.execution.arrow.maxRecordsPerBatch``: page rows can be MB-sized
+ARROW_MAX_RECORDS = 1024
+
+#: most rows in one Arrow batch that `map_rows` yields
+ROWS_PER_BATCH = 512
+
+#: SparkContexts whose Python workers can import the package. Weak, so a
+#: stopped context's entry goes with it and never vouches for a new one.
+_IMPORTABLE: weakref.WeakSet[SparkContext] = weakref.WeakSet()
 
 #: the interpreter's own ``zipimporter.invalidate_caches``
 _STOCK_INVALIDATE = zipimport.zipimporter.invalidate_caches
@@ -74,11 +95,75 @@ def install_zip_cache_guard() -> None:
         zipimport.zipimporter.invalidate_caches = _guarded_invalidate_caches
 
 
+def zip_guarded(fn: Callable) -> Callable:
+    """``fn`` installing the zip guard before it runs: the wrapper for a
+    function Spark calls in a Python worker (a kernel, a group-state
+    function)."""
+
+    def run(*args):
+        install_zip_cache_guard()
+        return fn(*args)
+
+    return run
+
+
+def ensure_workers_can_import(spark: SparkSession) -> None:
+    """Ship the package zip to Python workers via ``addPyFile``, once per
+    SparkContext. Kernels are unpickled *by import* in the workers, so the
+    package must be importable there even when the SparkSession was built
+    elsewhere, from an arbitrary cwd. On clusters this is the
+    ``--py-files`` zip; locally we build and add it on demand."""
+    sc = spark.sparkContext
+    if sc in _IMPORTABLE:
+        return
+    if _PKG_ROOT not in sys.path:
+        sys.path.insert(0, _PKG_ROOT)
+    try:
+        from jobs.package import build  # noqa: PLC0415
+    except ModuleNotFoundError as e:
+        # no jobs/ on disk (an installed package): the workers import the
+        # package the way this process did (PYTHONPATH, `build_session`)
+        if e.name not in ("jobs", "jobs.package"):
+            raise
+    else:
+        sc.addPyFile(build())
+    _IMPORTABLE.add(sc)
+
+
+def _rows_kernel(rows: Callable[..., Iterable[dict]], schema: pa.Schema):
+    """The `map_rows` kernel: ``rows(*values)`` per input row, its output
+    dicts re-batched by ``ROWS_PER_BATCH``."""
+
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        out: list[dict[str, Any]] = []
+        for batch in batches:
+            for values in zip(*(col.to_pylist() for col in batch.columns)):
+                for row in rows(*values):
+                    out.append(row)
+                    if len(out) == ROWS_PER_BATCH:
+                        yield pa.RecordBatch.from_pylist(out, schema=schema)
+                        out = []
+        if out:
+            yield pa.RecordBatch.from_pylist(out, schema=schema)
+
+    return zip_guarded(kernel)
+
+
+def map_rows(df: DataFrame, rows: Callable[..., Iterable[dict]], schema: pa.Schema) -> DataFrame:
+    """Run a row function over ``df`` in Python workers: ``rows(*values)``
+    is called once per input row, with the values in ``df``'s column order,
+    and returns the output rows as dicts keyed by ``schema``'s field names —
+    none, one or many. Rows stream: a worker holds one input Arrow batch
+    and at most ``ROWS_PER_BATCH`` output rows. The Spark schema is
+    ``schema``'s, so each output is typed once, in Arrow."""
+    ensure_workers_can_import(df.sparkSession)
+    return df.mapInArrow(_rows_kernel(rows, schema), from_arrow_schema(schema))
+
+
 def build_session(
     master: str = "local[*]",
     app_name: str = "activestorage-ocr-spark",
     shuffle_partitions: int | None = None,
-    arrow_max_records: int = 1024,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     # Python workers unpickle the Arrow kernels by importing this package, so
@@ -103,7 +188,7 @@ def build_session(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_max_records))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_MAX_RECORDS))
         .config("spark.sql.parquet.compression.codec", "zstd")
         # binary page rows are MB-scale and zstd compresses them ~7x: default
         # 128 MB *compressed* splits give far too few scan tasks for the

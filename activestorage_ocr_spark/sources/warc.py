@@ -6,8 +6,8 @@ Spark-first shape — the public cc-pyspark pattern: the INPUT relation is a
 list of WARC paths, fanned out file-per-task; each task STREAMS its file's
 records (readline/Content-Length walk, constant memory) and yields Arrow
 batches. No whole-file materialization (a Common-Crawl WARC is ~1 GB — a
-``binaryFile`` scan would hold it per row), no per-row Python UDF: one
-``mapInArrow`` over a path column.
+``binaryFile`` scan would hold it per row): one `map_rows` over a path
+column.
 
 Format notes (all from the public spec / Common Crawl layout):
 
@@ -48,7 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..engine import budget
-from .session import install_zip_cache_guard
+from .session import map_rows
 
 __all__ = ["read_warc", "to_pages", "write_warc", "parse_warc_stream", "WARC_ARROW"]
 
@@ -65,14 +65,11 @@ WARC_ARROW = pa.schema(
     ]
 )
 
-WARC_SPARK_SCHEMA = (
-    "url string, warc_ts timestamp, html binary, content_type string, "
-    "http_status int, content_language string, record_id string, "
-    "warc_file string"
-)
-
 #: decode-bomb guard: a single record block larger than this is skipped
 DEFAULT_MAX_PAYLOAD = 64 * 1024 * 1024
+
+#: `read_warc` tasks per core, at most one per file
+TASKS_PER_CORE = 2
 
 _CRLF = b"\r\n"
 #: zlib window bits to try, per Content-Encoding
@@ -238,57 +235,29 @@ def _open_warc(path: str):
     return io.BufferedReader(fh)
 
 
-def read_warc(
-    spark: SparkSession,
-    paths: list[str],
-    *,
-    tasks_per_core: int = 2,
-    max_payload_bytes: int = DEFAULT_MAX_PAYLOAD,
-    batch_rows: int = 512,
-) -> DataFrame:
-    """WARC files -> DataFrame of response records (see WARC_SPARK_SCHEMA).
+def read_warc(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """WARC files -> DataFrame of response records (see WARC_ARROW).
 
     File-granular parallelism: the path list becomes a one-column relation,
     round-robin repartitioned so each task streams whole files; records are
-    yielded in bounded Arrow batches (``batch_rows`` rows) so a 1 GB WARC
-    never materializes in worker memory.
+    yielded in bounded Arrow batches (`map_rows`) so a 1 GB WARC never
+    materializes in worker memory.
     """
-    from ..operators.extraction import ensure_workers_can_import
-
-    ensure_workers_can_import(spark)
     if not paths:
         raise ValueError("read_warc needs at least one path")
-    n_parts = min(len(paths), spark.sparkContext.defaultParallelism * tasks_per_core)
+    n_parts = min(len(paths), spark.sparkContext.defaultParallelism * TASKS_PER_CORE)
     files = spark.createDataFrame([(p,) for p in sorted(paths)], "path string")
-    kernel = _make_warc_kernel(max_payload_bytes, batch_rows)
-    return files.repartition(n_parts).mapInArrow(kernel, WARC_SPARK_SCHEMA)
+    return map_rows(files.repartition(n_parts), _warc_rows, WARC_ARROW)
 
 
-def _make_warc_kernel(max_payload_bytes: int, batch_rows: int):
-    def _kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        install_zip_cache_guard()
-        from activestorage_ocr_spark.sources.warc import (  # worker-side import
-            WARC_ARROW, _open_warc, parse_warc_stream,
-        )
-
-        rows: list[dict] = []
-        for batch in batches:
-            for path in batch.column("path").to_pylist():
-                fh = _open_warc(path)
-                try:
-                    for row in parse_warc_stream(
-                        fh, os.path.basename(path), max_payload_bytes
-                    ):
-                        rows.append(row)
-                        if len(rows) >= batch_rows:
-                            yield pa.RecordBatch.from_pylist(rows, schema=WARC_ARROW)
-                            rows = []
-                finally:
-                    fh.close()
-        if rows:
-            yield pa.RecordBatch.from_pylist(rows, schema=WARC_ARROW)
-
-    return _kernel
+def _warc_rows(path: str) -> Iterator[dict]:
+    """The `map_rows` row function of `read_warc`: one file's records,
+    streamed."""
+    fh = _open_warc(path)
+    try:
+        yield from parse_warc_stream(fh, os.path.basename(path))
+    finally:
+        fh.close()
 
 
 def to_pages(df: DataFrame) -> DataFrame:

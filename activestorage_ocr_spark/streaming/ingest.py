@@ -4,9 +4,9 @@ The reference is strictly request/response batch-of-one and the north rule is
 batch (SURVEY.md §2.6 streaming row), so the batch pipeline is primary. This
 module is the incremental-ingest surface a production crawl feed needs: new
 parquet files dropped into a landing dir are picked up by the file source,
-run through the SAME extraction kernel, and appended to the output sink with
-exactly-once file-source checkpointing — Structured Streaming's checkpoint
-dir replaces the batch pipeline's part-key manifest.
+run through the SAME ``extract_pages`` as a batch job, and appended to the
+output sink with exactly-once file-source checkpointing — Structured
+Streaming's checkpoint dir replaces the batch pipeline's part-key manifest.
 
 Watermarking: the hourly metrics stream tolerates late page arrivals up to
 ``late_threshold`` on ``warc_ts`` (tumbling windows, append mode).
@@ -18,8 +18,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.extraction import EXTRACTED_SCHEMA, make_extract_kernel
-from ..sources.session import install_zip_cache_guard
+from ..operators.extraction import extract_pages
+from ..sources.session import zip_guarded
 
 PAGES_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
 
@@ -37,26 +37,21 @@ def read_pages_stream(
 def extract_pages_stream(
     pages: DataFrame,
     *,
-    engine: str = "pixelocr",
-    preset: str = "minimal",
-    max_bytes: int = 52_428_800,
+    engine: str | None = None,
+    preset: str | None = None,
+    max_bytes: int | None = None,
     doc_timeout_ms: int | None = None,
 ) -> DataFrame:
-    """Streaming variant of the extraction pipeline: same kernel, map-only
-    (no repartition — a streaming micro-batch is one file group; the
-    in-kernel byte-budget slicing still guards memory). The per-document
-    wall budget matters MORE here than in batch: a straggling document
-    stalls the whole micro-batch and every trigger behind it. None resolves
-    from env config (ASOS_OCR_DOC_TIMEOUT_MS, default 30 s)."""
-    from ..engine.config import EngineConfig
-    from ..operators.extraction import ensure_workers_can_import
-
-    ensure_workers_can_import(pages.sparkSession)
-    if doc_timeout_ms is None:
-        doc_timeout_ms = EngineConfig.from_env().doc_timeout_ms
-    proj = pages.select("url", "warc_ts", "html", "lang")
-    kernel = make_extract_kernel(engine, preset, max_bytes, timeout_ms=doc_timeout_ms)
-    return proj.mapInArrow(kernel, EXTRACTED_SCHEMA)
+    """Streaming variant of the extraction pipeline: `extract_pages` with
+    skew routing off (map-only, no exchange — a streaming micro-batch is one
+    file group; the in-kernel byte-budget slicing still guards memory).
+    Unset knobs resolve from env config exactly as in batch. The
+    per-document wall budget matters MORE here than in batch: a straggling
+    document stalls the whole micro-batch and every trigger behind it."""
+    return extract_pages(
+        pages, engine=engine, preset=preset, max_bytes=max_bytes,
+        doc_timeout_ms=doc_timeout_ms, skew_handling="off",
+    )
 
 
 def start_extraction_stream(
@@ -237,7 +232,6 @@ def _make_session_fn(gap_ms: int):
     from pyspark.sql.streaming.state import GroupState
 
     def fn(key, pdf_iter, state: GroupState):
-        install_zip_cache_guard()
         host = key[0]
         if state.hasTimedOut:
             (s0, s1, n, b) = state.get
@@ -288,7 +282,7 @@ def _make_session_fn(gap_ms: int):
         if len(out):
             yield out
 
-    return fn
+    return zip_guarded(fn)
 
 
 def _duration_ms(s: str) -> int:

@@ -125,7 +125,7 @@ class TestSparkReader:
             warc.write_warc(str(tmp_path / f"q{i}.warc"), [RECS[0]])
             for i in range(5)
         ]
-        df = warc.read_warc(spark, paths, tasks_per_core=2)
+        df = warc.read_warc(spark, paths)
         # map-only plan: no shuffle beyond the path-list repartition, no
         # per-row Python UDF (ArrowEvalPython) — one MapInArrow node
         plan = df._jdf.queryExecution().executedPlan().toString()

@@ -294,21 +294,47 @@ class TestEnsureWorkersCanImport:
     def test_missing_jobs_package_is_skipped(self, monkeypatch):
         import sys
 
-        from activestorage_ocr_spark.operators import extraction
+        from activestorage_ocr_spark.sources import session
 
         monkeypatch.setitem(sys.modules, "jobs.package", None)  # as if not on disk
         spark = self._Spark()
-        extraction.ensure_workers_can_import(spark)
+        session.ensure_workers_can_import(spark)
         assert spark.added == []
 
     def test_build_failure_surfaces(self, monkeypatch):
         import jobs.package
 
-        from activestorage_ocr_spark.operators import extraction
+        from activestorage_ocr_spark.sources import session
 
         def broken_build():
             raise OSError("disk full")
 
         monkeypatch.setattr(jobs.package, "build", broken_build)
         with pytest.raises(OSError, match="disk full"):
-            extraction.ensure_workers_can_import(self._Spark())
+            session.ensure_workers_can_import(self._Spark())
+
+    def test_memo_is_per_context_not_per_id(self, monkeypatch):
+        # CPython hands a freed object's id to the next object of its size:
+        # a memo keyed on id() would vouch for a context it never saw
+        import types
+
+        import jobs.package
+
+        from activestorage_ocr_spark.sources import session
+
+        monkeypatch.setattr(jobs.package, "build", lambda: "pkg.zip")
+
+        class Context:  # no reference cycle: freed as soon as it is dropped
+            def __init__(self):
+                self.added = []
+
+            def addPyFile(self, path):  # noqa: N802 — SparkContext's name
+                self.added.append(path)
+
+        for _ in range(5):
+            sc = Context()
+            spark = types.SimpleNamespace(sparkContext=sc)
+            session.ensure_workers_can_import(spark)
+            session.ensure_workers_can_import(spark)  # once per context
+            assert sc.added == ["pkg.zip"]
+            del spark, sc

@@ -76,6 +76,22 @@ class TestStreamingExtraction:
         assert got.count() == n_unique
         assert got.select("url").distinct().count() == n_unique
 
+    def test_unset_knobs_resolve_from_env_as_in_batch(self, spark, tmp_path, monkeypatch):
+        from activestorage_ocr_spark.engine.config import ENV_PRESET
+
+        d = str(tmp_path / "landing")
+        html = b"<html><body><p>" + b"streamed words " * 20 + b"</p></body></html>"
+        spark.createDataFrame(
+            [(f"https://env.example/{i}", None, html, None, "en") for i in range(3)],
+            ingest.PAGES_DDL,
+        ).coalesce(1).write.parquet(d)
+        monkeypatch.setenv(ENV_PRESET, "aggressive")
+        out = str(tmp_path / "out")
+        q = ingest.start_extraction_stream(spark, d, out, str(tmp_path / "ck"))
+        q.awaitTermination(120)
+        got = spark.read.parquet(out).select("preset", "status").collect()
+        assert [(r.preset, r.status) for r in got] == [("aggressive", "ok")] * 3
+
     def test_hourly_metrics_watermarked(self, spark, landing, tmp_path):
         d, _ = landing
         out = str(tmp_path / "metrics")

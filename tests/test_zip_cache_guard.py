@@ -11,6 +11,7 @@ import os
 import zipfile
 import zipimport
 
+import pyarrow as pa
 import pytest
 
 from activestorage_ocr_spark.sources import session
@@ -100,17 +101,12 @@ class _FreshState:
 
 
 def _kernel_runs():
-    from activestorage_ocr_spark.operators import extraction, multimodal
-    from activestorage_ocr_spark.sources import warc
+    from activestorage_ocr_spark.operators import extraction
     from activestorage_ocr_spark.streaming import ingest
 
     return {
         "extract": lambda: extraction.make_extract_kernel("pixelocr", "minimal", 1 << 20)(iter([])),
-        "warc": lambda: warc._make_warc_kernel(1 << 20, 16)(iter([])),
-        "image_meta": lambda: multimodal._meta_kernel(iter([])),
-        "audio_meta": lambda: multimodal._audio_kernel(iter([])),
-        "video_meta": lambda: multimodal._video_meta_kernel(iter([])),
-        "video_frames": lambda: multimodal._make_frame_kernel(1000)(iter([])),
+        "map_rows": lambda: session._rows_kernel(lambda *values: (), pa.schema([]))(iter([])),
         "site_sessions": lambda: ingest._make_session_fn(60_000)(("h",), iter([]), _FreshState()),
     }
 
@@ -120,6 +116,51 @@ def test_every_kernel_installs_the_guard(name, reads):
     assert zipimport.zipimporter.invalidate_caches is session._STOCK_INVALIDATE
     assert list(_kernel_runs()[name]()) == []
     assert zipimport.zipimporter.invalidate_caches is session._guarded_invalidate_caches
+
+
+def test_map_rows_kernel_streams_bounded_batches(reads):
+    # row i fans out to i output rows (row 0 to none); output batches hold
+    # at most ROWS_PER_BATCH rows, filled across input batches
+    schema = pa.schema([("i", pa.int64()), ("j", pa.int64())])
+
+    def rows(i):
+        return ({"i": i, "j": j} for j in range(i))
+
+    batches = [pa.record_batch([pa.array([0, 300])], names=["i"]),
+               pa.record_batch([pa.array([400])], names=["i"])]
+    out = list(session._rows_kernel(rows, schema)(iter(batches)))
+    assert [b.num_rows for b in out] == [session.ROWS_PER_BATCH, 700 - session.ROWS_PER_BATCH]
+    assert all(b.schema == schema for b in out)
+    assert pa.Table.from_batches(out).to_pylist() == [
+        {"i": i, "j": j} for i in (300, 400) for j in range(i)
+    ]
+
+
+#: the only modules that may hand Python code to Spark's Arrow boundary or
+#: touch the worker's import machinery; every other operator is a row
+#: function run by `session.map_rows`
+_BOUNDARY_MODULES = ("operators/extraction.py", "sources/session.py")
+
+
+def test_only_two_modules_own_the_python_boundary():
+    import ast
+    import pathlib
+
+    import activestorage_ocr_spark
+
+    pkg = pathlib.Path(activestorage_ocr_spark.__file__).parent
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel in _BOUNDARY_MODULES:
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(node, ast.Call):
+                continue
+            name = getattr(node.func, "attr", getattr(node.func, "id", None))
+            if name in ("mapInArrow", "install_zip_cache_guard"):
+                offenders.append(f"{rel}:{node.lineno} {name}")
+    assert offenders == []
 
 
 def test_first_run_reads_no_manifest(tmp_path):
