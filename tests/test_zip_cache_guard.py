@@ -100,13 +100,55 @@ class _FreshState:
     exists = False
 
 
+class _CapturingFrame:
+    """Just enough of a DataFrame, and of its session, for an operator to
+    build its `map_rows` plan; keeps the kernel handed to ``mapInArrow``."""
+
+    def __init__(self):
+        self.sparkSession = self
+        self.sparkContext = self
+        self.defaultParallelism = 1
+        self.kernel = None
+
+    def select(self, *cols):
+        return self
+
+    def repartition(self, n):
+        return self
+
+    def createDataFrame(self, data, schema):
+        return self
+
+    def mapInArrow(self, kernel, schema):
+        self.kernel = kernel
+        return self
+
+
+def _operator_kernel(build):
+    """The worker kernel an operator's plan runs, built without Spark."""
+    frame = _CapturingFrame()
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(session, "ensure_workers_can_import", lambda spark: None)
+        build(frame)
+    return frame.kernel
+
+
 def _kernel_runs():
-    from activestorage_ocr_spark.operators import extraction
+    from activestorage_ocr_spark.operators import extraction, multimodal
+    from activestorage_ocr_spark.sources import warc
     from activestorage_ocr_spark.streaming import ingest
+
+    def operator_run(build):
+        return lambda: _operator_kernel(build)(iter([]))
 
     return {
         "extract": lambda: extraction.make_extract_kernel("pixelocr", "minimal", 1 << 20)(iter([])),
         "map_rows": lambda: session._rows_kernel(lambda *values: (), pa.schema([]))(iter([])),
+        "warc": operator_run(lambda spark: warc.read_warc(spark, ["x.warc"])),
+        "image_meta": operator_run(multimodal.image_metadata),
+        "audio_meta": operator_run(multimodal.audio_metadata),
+        "video_meta": operator_run(multimodal.video_metadata),
+        "video_frames": operator_run(multimodal.video_frame_sample),
         "site_sessions": lambda: ingest._make_session_fn(60_000)(("h",), iter([]), _FreshState()),
     }
 
